@@ -299,6 +299,9 @@ object Bench {
     // under the 1900-byte safety margin of the driver's 2000-char tail
     var nPerQuery = perQueryEntries.size
     while (nPerQuery > 0 && summaryLine(nPerQuery).length > 1900) nPerQuery -= 1
+    if (summaryLine(nPerQuery).length > 1900)
+      System.err.println(s"[bench] summary line is ${summaryLine(0).length} " +
+        "bytes with no per-query entries — a 2000-char tail reader may cut it")
     // stop() BEFORE the summary so no Spark shutdown chatter can land
     // after it — with build.sbt's StdoutOutput + showSuccess=false this
     // line is the process's last stdout line, which is exactly what the

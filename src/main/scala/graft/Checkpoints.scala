@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 
 /** Tracked local checkpoints. `Dataset.localCheckpoint` pins RDD blocks
   * in executor storage that `Dataset.unpersist` NEVER releases — dataset
@@ -19,6 +21,8 @@ import org.apache.spark.sql.DataFrame
   * the checkpoint result no longer depends on anything upstream.
   */
 object Checkpoints {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   final case class Checkpointed(df: DataFrame, pinned: Seq[RDD[_]]) {
     def release(): Unit = pinned.foreach(_.unpersist(blocking = false))
@@ -54,6 +58,33 @@ object Checkpoints {
       }
     Checkpointed(mat, delta())
   }
+
+  /** Bound on the wait for observed metrics: a query listener posts
+    * them just after the job, so a lapse means a stalled listener bus.
+    */
+  private val ObserveWait = 10.seconds
+
+  /** [[eager]] with named aggregates that RIDE the checkpoint job via
+    * `Dataset.observe`: the handle plus the metrics row, at no extra
+    * job. EXACT INTEGER metrics only — accumulators merge in
+    * task-completion order, which would jitter a floating-point sum.
+    */
+  def eagerObserved(df: DataFrame, metric: Column, more: Column*): (Checkpointed, Row) = {
+    val obs = Observation()
+    val cp = eager(df.observe(obs, metric, more: _*))
+    (cp, awaitMetrics(cp, obs, metric +: more, ObserveWait))
+  }
+
+  /** The observed row, or — once `wait` lapses — the same aggregate
+    * scanned over the blocks `cp` pinned (one job, identical value).
+    */
+  private[graft] def awaitMetrics(cp: Checkpointed, obs: Observation,
+      metrics: Seq[Column], wait: FiniteDuration): Row =
+    try Await.result(obs.future, wait)
+    catch { case _: TimeoutException =>
+      log.warn(s"observed metrics missing after $wait; scanning the checkpoint")
+      cp.df.agg(metrics.head, metrics.tail: _*).head()
+    }
 
   /** Run `work` and unpersist every RDD it left pinned. For WRITE legs
     * whose building blocks cache internally (e.g. the MinHash banding's

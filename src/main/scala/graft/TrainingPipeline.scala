@@ -42,9 +42,44 @@ object TrainingPipeline {
     */
   private[graft] var payloadFault: Int => Unit = _ => ()
 
+  /** Test-only tap: sees each stage's name and checkpointed frame while
+    * it is still pinned. No-op in production.
+    */
+  private[graft] var stageTap: (String, DataFrame) => Unit = (_, _) => ()
+
+  /** The stage hook all curation flows share. Each stage boundary
+    * CHECKPOINTS (localCheckpoint: materialize + truncate lineage), so a
+    * later stage never recomputes an earlier one's joins and the plan
+    * stays flat — nested stage lineages grow the per-action plan walk
+    * super-linearly. The row count rides the checkpoint job
+    * ([[Checkpoints.eagerObserved]]), so accounting costs no job. Every
+    * stage consumes only its predecessor, whose blocks are released once
+    * the new checkpoint has materialized: storage stays one stage deep
+    * (TrainingPipelineSpec asserts the bound). The latest stage stays
+    * pinned until [[releaseLast]].
+    */
+  final class Stages {
+    private val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    private var last: Checkpoints.Checkpointed = null
+
+    def apply(name: String, df: DataFrame): DataFrame = {
+      val (cp, m) = Checkpoints.eagerObserved(df, count(lit(1)).as("rows"))
+      rows += name -> m.getLong(0)
+      stageTap(name, cp.df)
+      releaseLast()
+      last = cp
+      cp.df
+    }
+
+    def counts: Seq[(String, Long)] = rows.toSeq
+
+    def releaseLast(): Unit = if (last != null) last.release()
+  }
+
   /** Runs curation over `dir`'s documents; returns the final chunk
     * DataFrame and the per-stage row counts, and optionally writes the
-    * chunks range-sharded by doc_id.
+    * chunks range-sharded by doc_id. Only the returned chunk frame stays
+    * persisted for the caller.
     */
   def curate(s: SparkSession, dir: String,
       outPath: Option[String] = None,
@@ -52,29 +87,7 @@ object TrainingPipeline {
       gopherGate: Boolean = false,
       semanticDedup: Boolean = false,
       shards: Int = 8): (DataFrame, Seq[(String, Long)]) = {
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    // each stage boundary CHECKPOINTS (localCheckpoint: materialize +
-    // truncate lineage). Truncation, not just caching, is load-bearing
-    // twice over: a later stage never recomputes an earlier one's joins,
-    // and the logical plan stays flat — seven nested stage lineages
-    // otherwise grow the per-action plan walk (Catalyst analysis, plan
-    // descriptions) super-linearly. A cluster run would use
-    // reliable checkpoints on DFS; local[] uses executor storage.
-    // Every stage consumes only its predecessor, so once the new
-    // checkpoint has materialized the previous stage's blocks are
-    // unpersisted — executor storage stays one-stage-deep across the
-    // run instead of growing to seven pinned copies of the corpus
-    // (TrainingPipelineSpec asserts the bound; only the returned chunk
-    // frame stays persisted for the caller).
-    var prevStage: Checkpoints.Checkpointed = null
-    def stage(name: String, df: DataFrame): DataFrame = {
-      val cp = Checkpoints.eager(df)
-      counts += name -> cp.df.count()
-      if (prevStage != null) prevStage.release()
-      prevStage = cp
-      cp.df
-    }
-
+    val stage = new Stages
     val docs = stage("ingest", Tables.documents(s, dir))
 
     // map-only gates — Catalyst fuses all three into the scan pass.
@@ -88,19 +101,11 @@ object TrainingPipeline {
     val sampled = stage("stratified_sample",
       gated.filter(Relational.stratifiedKeep(col("doc_id"), col("lang"))))
 
-    // exact dedup: min doc_id survives per content digest
-    val keepers = sampled
-      .groupBy(fingerprint(col("text")).as("fp"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val exact = stage("exact_dedup",
-      sampled.join(keepers, Seq("doc_id"), "left_semi"))
-
-    val chunks = backHalf(s, dir, exact, stage, semanticDedup)
+    val chunks = backHalf(s, dir, exactDedup(stage, sampled), stage, semanticDedup)
 
     outPath.foreach(p =>
       graft.sources.Sinks.writeRangeSharded(chunks, p, "doc_id", shards))
-    (chunks, counts.toSeq)
+    (chunks, stage.counts)
   }
 
   /** The corpus-global BACK HALF of curation — near-dup cluster drop →
@@ -112,15 +117,14 @@ object TrainingPipeline {
     * StreamCurationSpec pins hybrid == batch end-to-end), so the
     * "streaming hygiene, batch global dedup" split runs the same code
     * path rather than a re-implementation. `stage` is the caller's
-    * checkpoint/accounting hook; the default materializes each stage
-    * boundary (a pass-through would leave the near-dup/decontamination
-    * anti-joins self-referencing one lineage — conflicting attribute
-    * ids) but never releases — a long-lived caller should pass its own
-    * hook, as [[curate]] does, or sweep persistent RDDs afterwards.
+    * hook, so [[curate]]'s counts continue across the split; a stage
+    * boundary must materialize (a pass-through would leave the
+    * near-dup/decontamination anti-joins self-referencing one lineage —
+    * conflicting attribute ids). Only the returned chunk frame stays
+    * pinned.
     */
   def backHalf(s: SparkSession, dir: String, exact: DataFrame,
-      stage: (String, DataFrame) => DataFrame =
-        (_, df) => Checkpoints.eager(df).df,
+      stage: Stages = new Stages,
       semanticDedup: Boolean = false): DataFrame = {
     // near-dup clusters: keep exactly one member per cluster. The
     // canonical member is chosen AMONG THIS RUN'S SURVIVORS — the
@@ -183,6 +187,34 @@ object TrainingPipeline {
 
     // chunk the survivors 128/96 (same grid as t16)
     stage("chunk", chunkFrame(paraDeduped))
+  }
+
+  /** Exact dedup stage: the min doc_id survives per content digest. */
+  private def exactDedup(stage: Stages, docs: DataFrame): DataFrame = {
+    val keepers = docs
+      .groupBy(fingerprint(col("text")).as("fp"))
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"))
+    stage("exact_dedup", docs.join(keepers, Seq("doc_id"), "left_semi"))
+  }
+
+  /** Decontamination stage of the incremental flows: drops docs sharing
+    * a 4-gram with the benchmark set (d6's `% 97` eval slice of
+    * `benchDir`). The bench dim broadcasts; `docs` is the only scanned
+    * side.
+    */
+  private def decontaminate(s: SparkSession, stage: Stages, docs: DataFrame,
+      benchDir: String): DataFrame = {
+    def grams(d: DataFrame): DataFrame = d.select(col("doc_id"),
+      explode(shingles(tokenize(col("text")), 4)).as("g"))
+    val bench = grams(Tables.documents(s, benchDir)
+        .filter(col("doc_id") % 97 === 0))
+      .select(col("g")).distinct()
+    val contaminated = grams(docs)
+      .join(broadcast(bench), Seq("g"), "left_semi")
+      .select(col("doc_id")).distinct()
+    stage("decontaminate",
+      docs.join(broadcast(contaminated), Seq("doc_id"), "left_anti"))
   }
 
   /** t16's 128/96 chunk grid over a (doc_id, source, text, ...) frame —
@@ -266,25 +298,10 @@ object TrainingPipeline {
       "batchEmbeddings and embedStoreDir must be supplied together")
     require(batchMedia.isDefined == mediaStoreDir.isDefined,
       "batchMedia and mediaStoreDir must be supplied together")
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    var prevStage: Checkpoints.Checkpointed = null
-    def stage(name: String, df: DataFrame): DataFrame = {
-      val cp = Checkpoints.eager(df)
-      counts += name -> cp.df.count()
-      if (prevStage != null) prevStage.release()
-      prevStage = cp
-      cp.df
-    }
-
+    val stage = new Stages
     val ingested = stage("ingest", batch)
-    val gated = stage("quality_gate",
-      ingested.filter(qualityScore(col("text")) >= minQuality))
-    val keepers = gated
-      .groupBy(fingerprint(col("text")).as("fp"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val exact = stage("exact_dedup",
-      gated.join(keepers, Seq("doc_id"), "left_semi"))
+    val exact = exactDedup(stage, stage("quality_gate",
+      ingested.filter(qualityScore(col("text")) >= minQuality)))
 
     // near-dup gate against the persistent index — drop ids are batch-
     // sized (a subset of the batch), so the anti-join broadcasts. The
@@ -297,7 +314,7 @@ object TrainingPipeline {
     val novel =
       try stage("near_dup_gate",
         exact.join(broadcast(gate.df), Seq("doc_id"), "left_anti"))
-      finally gate.release() // stage() is eager, so releasing here is safe
+      finally gate.release() // the stage is eager, so releasing here is safe
 
     // embedding near-dup gate (the d20 store): probe the SURVIVORS'
     // vectors only — already-dropped docs cost no probe work, and a doc
@@ -332,19 +349,7 @@ object TrainingPipeline {
       case _ => embedGated
     }
 
-    // decontaminate the batch against the benchmark gram set (d6's
-    // slice and gram width; the bench dim broadcasts, the batch is the
-    // only scanned side)
-    def grams(d: DataFrame): DataFrame = d.select(col("doc_id"),
-      explode(shingles(tokenize(col("text")), 4)).as("g"))
-    val bench = grams(Tables.documents(s, benchDir)
-        .filter(col("doc_id") % 97 === 0))
-      .select(col("g")).distinct()
-    val contaminated = grams(mediaGated)
-      .join(broadcast(bench), Seq("g"), "left_semi")
-      .select(col("doc_id")).distinct()
-    val clean = stage("decontaminate",
-      mediaGated.join(broadcast(contaminated), Seq("doc_id"), "left_anti"))
+    val clean = decontaminate(s, stage, mediaGated, benchDir)
 
     // append the ACCEPTED docs to the store so the NEXT batch's gate
     // sees them — shingles (verify payloads) FIRST, bands (probe index)
@@ -385,7 +390,7 @@ object TrainingPipeline {
     val chunks = stage("chunk", chunkFrame(clean))
     outPath.foreach(p =>
       graft.sources.Sinks.writeRangeSharded(chunks, p, "doc_id", shards))
-    (chunks, counts.toSeq)
+    (chunks, stage.counts)
   }
 
   /** The unified verdict-frame schema [[curateIncrementalBatch]]
@@ -481,13 +486,8 @@ object TrainingPipeline {
     * one store, one geometry, for life. `probeDepth` turns on the embed
     * gate's multi-probe recall dial ([[Dedup.d20ProbeDirs]]) and
     * `mediaProbeDepth` the media gate's ([[Multimodal.mm9Probe]];
-    * depth 1 certifies the full hamming-6 radius). `stageCounts = false` drops the
-    * per-stage accounting — each stage's eager count() is a full Spark
-    * job, and at production batch sizes the 8 count jobs plus the
-    * stage_counts write are pure fixed floor (TriGateScaleProbe's ~8 s
-    * breakdown); with counts off the `stage_counts` table is simply
-    * not written and verdicts/chunks are byte-identical (spec-pinned).
-    * `foldWrites = true` shrinks the floor further: verdicts + chunks
+    * depth 1 certifies the full hamming-6 radius).
+    * `foldWrites = true` shrinks the per-batch job floor: verdicts + chunks
     * land as ONE kind-partitioned write under `outDir/curated/batch=
     * <id>` instead of two jobs (read them back via [[readVerdicts]] /
     * [[readChunks]] — row-identical to the flat layout, spec-pinned),
@@ -507,7 +507,6 @@ object TrainingPipeline {
       mediaStoreDir: Option[String] = None,
       sigSpec: Dedup.SigSpec = Dedup.SigNarrow,
       probeDepth: Int = 0,
-      stageCounts: Boolean = true,
       foldWrites: Boolean = false,
       mediaProbeDepth: Int = 0,
       mhSpec: Dedup.MinHashSpec = Dedup.MinHashDefault): Unit = {
@@ -569,29 +568,10 @@ object TrainingPipeline {
             id < batchId && GateStore.hasDataFiles(new java.io.File(p)) }
           .map(_._2)
 
-      val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      var prevStage: Checkpoints.Checkpointed = null
-      def stage(name: String, df: DataFrame): DataFrame = {
-        val cp = Checkpoints.eager(df)
-        // the checkpoint itself stays either way (it caps recompute and
-        // lets the predecessor release); only the count() JOB is on the
-        // stageCounts dial — one full job per stage, pure floor when
-        // nobody reads the accounting
-        if (stageCounts) counts += name -> cp.df.count()
-        if (prevStage != null) prevStage.release()
-        prevStage = cp
-        cp.df
-      }
-
+      val stage = new Stages
       val ingested = stage("ingest", batch)
-      val gated = stage("quality_gate",
-        ingested.filter(qualityScore(col("text")) >= minQuality))
-      val keepers = gated
-        .groupBy(fingerprint(col("text")).as("fp"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-      val exact = stage("exact_dedup",
-        gated.join(keepers, Seq("doc_id"), "left_semi"))
+      val exact = exactDedup(stage, stage("quality_gate",
+        ingested.filter(qualityScore(col("text")) >= minQuality)))
 
       // the three gates, each probing only its predecessor's SURVIVORS
       // (curateIncremental's shape). The probe checkpoints are held until
@@ -646,17 +626,7 @@ object TrainingPipeline {
               Seq("doc_id"), "left_anti"))
         }
 
-      // decontaminate (d6's slice and gram width, curateIncremental's shape)
-      def grams(d: DataFrame): DataFrame = d.select(col("doc_id"),
-        explode(shingles(tokenize(col("text")), 4)).as("g"))
-      val bench = grams(Tables.documents(s, benchDir)
-          .filter(col("doc_id") % 97 === 0))
-        .select(col("g")).distinct()
-      val contaminated = grams(mediaGated)
-        .join(broadcast(bench), Seq("g"), "left_semi")
-        .select(col("doc_id")).distinct()
-      val clean = stage("decontaminate",
-        mediaGated.join(broadcast(contaminated), Seq("doc_id"), "left_anti"))
+      val clean = decontaminate(s, stage, mediaGated, benchDir)
 
       // ---- publish, then append, sentinel LAST (GateStore contract) ----
       // 1. the unified verdict frame
@@ -700,14 +670,12 @@ object TrainingPipeline {
           .parquet(s"$outDir/chunks/batch=$batchId")
       }
 
-      // 3. per-stage accounting (stageCounts dial: the chunk re-read +
-      //    count and the coalesced write are two more floor jobs)
-      if (stageCounts) {
-        counts += "chunk" -> readChunks(s, outDir, batchId).count()
-        import s.implicits._
-        counts.toSeq.toDF("stage", "rows").coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/stage_counts/batch=$batchId")
-      }
+      // 3. per-stage accounting: the chunks were never checkpointed, so
+      //    their count re-reads the committed file
+      s.createDataFrame(
+          stage.counts :+ ("chunk" -> readChunks(s, outDir, batchId).count()))
+        .toDF("stage", "rows").coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/stage_counts/batch=$batchId")
 
       // 4. store appends — shingles/sigs/media bands first, TEXT bands
       //    (the batch's one replay sentinel) dead last. The contract
@@ -837,7 +805,7 @@ object TrainingPipeline {
         Dedup.minhashBandsSpec(sh, mhSpec).write.mode("overwrite")
           .parquet(s"$storeDir/bands/batch=$batchId")
       }
-      if (prevStage != null) prevStage.release()
+      stage.releaseLast()
     }
     } finally if (deferredInterrupt) Thread.currentThread().interrupt()
   }

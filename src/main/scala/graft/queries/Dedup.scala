@@ -721,7 +721,7 @@ object Dedup {
     */
   def connectedComponentsWithRounds(pairs: DataFrame, maxRounds: Int = 32)
       : (graft.Checkpoints.Checkpointed, Int) = {
-    import graft.Checkpoints.eager
+    import graft.Checkpoints.{eager, eagerObserved}
     // Materialize the caller's pair plan ONCE: `nodes` and `init` both
     // derive from it, and checkpointing each directly from the raw plan
     // re-ran the whole upstream generator (d2's band join + Jaccard
@@ -739,21 +739,18 @@ object Dedup {
     // edge-set signature for the fixed-point check: exact integers
     // (count + order-independent xor of xxhash64), so the observation's
     // task-completion-order merge cannot change the value
-    def sigOf(obs: org.apache.spark.sql.Observation): (Long, Long) = {
-      val m = obs.get
-      (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long])
-    }
-    def observed(df: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame =
-      df.observe(obs, count(lit(1)).as("n"),
+    def sigged(df: DataFrame): (graft.Checkpoints.Checkpointed, (Long, Long)) = {
+      val (cp, m) = eagerObserved(df, count(lit(1)).as("n"),
         coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x"))
+      (cp, (m.getLong(0), m.getLong(1)))
+    }
     // undirected edges oriented high→low (smallStar's output orientation,
     // so an already-converged star forest is detected in one round),
     // self-loops dropped; the initial signature rides this checkpoint
-    val obs0 = org.apache.spark.sql.Observation()
-    val init = eager(observed(raw
+    val (init, sig0) = sigged(raw
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct(), obs0))
+      .distinct())
     raw0.release()
 
     def largeStar(e: DataFrame): DataFrame = {
@@ -790,7 +787,7 @@ object Dedup {
     // THE CHECKPOINT MATERIALIZATION via Dataset.observe (r18): the
     // former shape re-scanned the just-pinned blocks as a second job
     // every round, i.e. one extra pass over the corpus-sized edge state
-    // per round at cluster scale (guide §1.2, remove passes; ObserveProbe
+    // per round at cluster scale (guide §1.2, remove passes; CheckpointsSpec
     // pins that observed metrics fire under localCheckpoint(eager)).
     // Safe ONLY because both metrics are exact integers, so the
     // task-completion-order accumulator merge cannot change them — the
@@ -799,16 +796,14 @@ object Dedup {
     // The EXACT set check (`except`) still runs only when signatures
     // agree, i.e. once at true convergence.
     var edges = init
-    var sig = sigOf(obs0)
+    var sig = sig0
     var stable = false
     var rounds = 0
     while (!stable && rounds < maxRounds) {
-      val obsR = org.apache.spark.sql.Observation()
-      val next = eager(observed(smallStar(largeStar(edges.df)), obsR))
+      val (next, nextSig) = sigged(smallStar(largeStar(edges.df)))
       // `next` is materialized, so the superseded round's blocks
       // release immediately — storage stays O(1) in rounds (CCSpec
       // asserts this).
-      val nextSig = sigOf(obsR)
       stable = nextSig == sig && next.df.except(edges.df).isEmpty
       edges.release()
       edges = next

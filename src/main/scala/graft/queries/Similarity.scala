@@ -1073,6 +1073,10 @@ object Similarity {
     // scored cache (single consumer now), one full sweep rescan, two
     // exchanges and the final join. The hit-count groupBy reuses the
     // (nprobe, id1) partitioning of the TopK aggregate — no new exchange.
+    // A setting whose candidates hit nothing still gets its row, with
+    // n_hits = 0: the sum runs over every (nprobe, query), and the s13Sql
+    // twin reports all four settings. The old inner join to the hit
+    // counts dropped such a setting; that was a latent bug.
     val perQ = tagged.groupBy(col("nprobe"), col("id1"))
       .agg(TopK.topK(K)(col("cos"), col("id2")).as("top"),
         count(lit(1)).as("nc"))

@@ -81,7 +81,6 @@ object StreamCuration {
       compactEvery: Option[Int] = None,
       compactLeveled: Boolean = false,
       probeDepth: Int = 0,
-      stageCounts: Boolean = true,
       foldWrites: Boolean = false,
       mediaProbeDepth: Int = 0,
       mhSpec: graft.queries.Dedup.MinHashSpec =
@@ -111,8 +110,7 @@ object StreamCuration {
         minQuality = minQuality,
         batchEmbeddings = Some(embs), embedStoreDir = Some(embedStoreDir),
         batchMedia = Some(media), mediaStoreDir = Some(mediaStoreDir),
-        sigSpec = sigSpec, probeDepth = probeDepth,
-        stageCounts = stageCounts, foldWrites = foldWrites,
+        sigSpec = sigSpec, probeDepth = probeDepth, foldWrites = foldWrites,
         mediaProbeDepth = mediaProbeDepth, mhSpec = mhSpec)
       // inline maintenance, per store (each keyed off its OWN committed
       // dir count — see GateStore.maybeCompact). Safe relative to the

@@ -110,6 +110,48 @@ class TrainingPipelineSpec extends AnyFunSuite {
       s"$pinnedDuringCurate persistent RDDs pinned by curate — stage leak?")
   }
 
+  test("curate's stage counts ride the checkpoints: no hook job outside a checkpoint, counts exact") {
+    val sc = spark.sparkContext
+    // final-stage call sites of the jobs the stage hook submitted,
+    // minus the tap's own recount jobs (their job group)
+    val hookJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tapped = Option(j.properties)
+          .exists(_.getProperty("spark.jobGroup.id") == "stage-tap")
+        j.stageInfos.sortBy(-_.stageId).headOption.map(_.details)
+          .filter(d => !tapped && d.contains("TrainingPipeline$Stages.apply"))
+          .foreach(hookJobs.add)
+      }
+    }
+    val recounted = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    TrainingPipeline.stageTap = (name, df) => {
+      sc.setJobGroup("stage-tap", s"recount $name")
+      try recounted += name -> df.count() finally sc.clearJobGroup()
+    }
+    // full call stacks, so every job names the frames it came from
+    val depth = Option(System.getProperty("spark.callstack.depth"))
+    System.setProperty("spark.callstack.depth", "400")
+    sc.addSparkListener(listener)
+    val (chunks, counts) =
+      try TrainingPipeline.curate(spark, dir)
+      finally {
+        TrainingPipeline.stageTap = (_, _) => ()
+        Thread.sleep(1000) // let the async listener bus drain
+        sc.removeSparkListener(listener)
+        depth.fold(System.clearProperty("spark.callstack.depth"))(
+          System.setProperty("spark.callstack.depth", _))
+      }
+    assert(recounted.toSeq == counts)
+    assert(chunks.count() == counts.last._2)
+    import scala.jdk.CollectionConverters._
+    val jobs = hookJobs.asScala.toSeq
+    assert(jobs.size >= counts.size, s"${jobs.size} hook jobs for ${counts.size} stages")
+    jobs.foreach(d => assert(d.contains("Checkpoints$.eagerBuild"),
+      s"stage-hook job outside a checkpoint materialization:\n$d"))
+  }
+
   test("gopher gate tightens the quality stage and only that stage") {
     val (_, plain) = TrainingPipeline.curate(spark, dir)
     val (_, gated) = TrainingPipeline.curate(spark, dir, gopherGate = true)

@@ -83,7 +83,7 @@ class TriGateCurationSpec extends AnyFunSuite {
       b1.toDF("doc_id", "text", "source", "embedding", "payload", "format"))
   }
 
-  private def stageCounts(outDir: String, id: Long): Map[String, Long] =
+  private def readStageCounts(outDir: String, id: Long): Map[String, Long] =
     spark.read.parquet(s"$outDir/stage_counts/batch=$id")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
@@ -122,14 +122,14 @@ class TriGateCurationSpec extends AnyFunSuite {
     // batch 0: empty stores probe nothing — everything passes, stores
     // seeded, verdict frame empty (the bootstrap curateIncremental's
     // flat layout cannot express)
-    val c0 = stageCounts(outDir, 0)
+    val c0 = readStageCounts(outDir, 0)
     assert(c0("ingest") == 2 && c0("near_dup_gate") == 2 &&
       c0("embed_dup_gate") == 2 && c0("media_dup_gate") == 2, c0.toString)
     assert(verdictSet(outDir, 0).isEmpty)
     assert(new java.io.File(s"$tStore/bands/batch=0/_SUCCESS").exists())
 
     // batch 1: one drop per modality, the control survives
-    val c1 = stageCounts(outDir, 1)
+    val c1 = readStageCounts(outDir, 1)
     assert(c1("ingest") == 4 && c1("near_dup_gate") == 3 &&
       c1("embed_dup_gate") == 2 && c1("media_dup_gate") == 1, c1.toString)
     val kept = spark.read.parquet(s"$outDir/chunks/batch=1")
@@ -216,8 +216,8 @@ class TriGateCurationSpec extends AnyFunSuite {
         batchEmbeddings = Some(embsOf(bs(1))), embedStoreDir = Some(eF),
         batchMedia = Some(mediaOf(bs(1))), mediaStoreDir = Some(mF))
 
-      assert(stageCounts(outB, 1).toSeq.sorted == countsF.sorted,
-        s"stage counts diverged: ${stageCounts(outB, 1)} vs $countsF")
+      assert(readStageCounts(outB, 1).toSeq.sorted == countsF.sorted,
+        s"stage counts diverged: ${readStageCounts(outB, 1)} vs $countsF")
       val chunksB = spark.read.parquet(s"$outB/chunks/batch=1")
       val cols = chunksF.columns.sorted.toSeq
       assert(chunksB.select(cols.map(col): _*).collect().toSet ==
@@ -245,7 +245,7 @@ class TriGateCurationSpec extends AnyFunSuite {
       (0 until 2).foreach { i =>
         assert(verdictSet(oP, i) == verdictSet(oC, i),
           s"policy verdicts diverged at batch $i")
-        assert(stageCounts(oP, i) == stageCounts(oC, i))
+        assert(readStageCounts(oP, i) == readStageCounts(oC, i))
         assert(spark.read.parquet(s"$oP/chunks/batch=$i")
             .select("doc_id").collect().map(_.getLong(0)).toSet ==
           spark.read.parquet(s"$oC/chunks/batch=$i")
@@ -343,56 +343,6 @@ class TriGateCurationSpec extends AnyFunSuite {
     }
   }
 
-  test("stageCounts off: verdicts and chunks identical, stage_counts not written, measurably fewer jobs") {
-    // the tri-gate floor is ~30 jobs/batch, 8 of them the per-stage
-    // eager count()s plus the chunk re-read and the stage_counts write
-    // (TriGateScaleProbe's breakdown) — pure fixed cost when nobody
-    // reads the accounting. stageCounts=false must drop jobs WITHOUT
-    // touching a single output byte of verdicts or chunks.
-    val root = java.nio.file.Files.createTempDirectory("trigate-sc-").toString
-    try {
-      val bs = alignedBatches()
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      def drive(tag: String, counts: Boolean): (String, Int) = {
-        val out = s"$root/out-$tag"
-        val sink = StreamCuration.triGateSink(spark, s"$root/text-$tag",
-          s"$root/embed-$tag", s"$root/media-$tag", dir, out,
-          owner = s"trigate-sc-$tag", stageCounts = counts)
-        spark.sparkContext.addSparkListener(listener)
-        jobs.set(0)
-        try bs.zipWithIndex.foreach { case (b, i) => sink(b, i.toLong) }
-        finally {
-          Thread.sleep(1000) // let the async listener bus drain
-          spark.sparkContext.removeSparkListener(listener)
-        }
-        (out, jobs.get())
-      }
-      val (onOut, onJobs) = drive("on", counts = true)
-      val (offOut, offJobs) = drive("off", counts = false)
-      def chunkSet(out: String, i: Int): Set[String] =
-        spark.read.parquet(s"$out/chunks/batch=$i")
-          .collect().map(_.mkString("|")).toSet
-      (0 until bs.size).foreach { i =>
-        assert(verdictSet(offOut, i.toLong) == verdictSet(onOut, i.toLong),
-          s"verdicts diverged with counts off at batch $i")
-        assert(chunkSet(offOut, i) == chunkSet(onOut, i),
-          s"chunks diverged with counts off at batch $i")
-        assert(new java.io.File(s"$onOut/stage_counts/batch=$i").exists())
-      }
-      assert(!new java.io.File(s"$offOut/stage_counts").exists(),
-        "stage_counts written despite stageCounts=false")
-      assert(offJobs < onJobs,
-        s"counts-off ran $offJobs jobs vs $onJobs with counts on")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-  }
-
   test("foldWrites: one publish job, row-identical verdicts+chunks via the layout-agnostic readers, same stores, replay still no-op") {
     val root = java.nio.file.Files.createTempDirectory("trigate-fw-").toString
     try {
@@ -407,8 +357,7 @@ class TriGateCurationSpec extends AnyFunSuite {
         val out = s"$root/out-$tag"
         val sink = StreamCuration.triGateSink(spark, s"$root/text-$tag",
           s"$root/embed-$tag", s"$root/media-$tag", dir, out,
-          owner = s"trigate-fw-$tag", stageCounts = false,
-          foldWrites = fold)
+          owner = s"trigate-fw-$tag", foldWrites = fold)
         spark.sparkContext.addSparkListener(listener)
         jobs.set(0)
         try bs.zipWithIndex.foreach { case (b, i) => sink(b, i.toLong) }
@@ -463,7 +412,7 @@ class TriGateCurationSpec extends AnyFunSuite {
       val before = fp(s"$foldOut/curated/batch=1")
       val sink = StreamCuration.triGateSink(spark, foldText,
         s"$root/embed-fold", s"$root/media-fold", dir, foldOut,
-        owner = "trigate-fw-fold", stageCounts = false, foldWrites = true)
+        owner = "trigate-fw-fold", foldWrites = true)
       sink(bs(1), 1L)
       assert(fp(s"$foldOut/curated/batch=1") == before,
         "replayed folded batch rewrote published output")
@@ -478,8 +427,7 @@ class TriGateCurationSpec extends AnyFunSuite {
       val bs = alignedBatches()
       def mk(tag: String) = StreamCuration.triGateSink(spark,
         s"$root/text-$tag", s"$root/embed-$tag", s"$root/media-$tag",
-        dir, s"$root/out-$tag", owner = s"trigate-cx-$tag",
-        stageCounts = false, foldWrites = true)
+        dir, s"$root/out-$tag", owner = s"trigate-cx-$tag", foldWrites = true)
       // control trio: the same batches, uninterrupted
       val control = mk("c")
       bs.zipWithIndex.foreach { case (b, i) => control(b, i.toLong) }
@@ -557,7 +505,7 @@ class TriGateCurationSpec extends AnyFunSuite {
       val bs = alignedBatches()
       def mkSink(tag: String) = StreamCuration.triGateSink(spark,
         s"$root/text-$tag", s"$root/embed-$tag", s"$root/media-$tag",
-        dir, s"$root/out-$tag", owner = "trigate-mt", stageCounts = false)
+        dir, s"$root/out-$tag", owner = "trigate-mt")
       val (sinkM, sinkC) = (mkSink("m"), mkSink("c"))
       bs.zipWithIndex.foreach { case (b, i) =>
         sinkM(b, i.toLong); sinkC(b, i.toLong) }
