@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
   * designed steady state — artifacts pre-warmed before timing), and
   * `cold_queries` re-times each against a throwaway artifact root with
   * the model registry cleared, measuring the full compute.
+  *
+  * A query that throws in any timed run is marked `"failed"` in the
+  * full line's `status` map, left out of `value`, `total_with_cold` and
+  * the summary's per-query maps, and counted in the summary's
+  * `n_failed`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -70,6 +75,9 @@ object Bench {
     spark.sparkContext.addSparkListener(metrics)
     val warmMetrics = scala.collection.mutable.Map[String, Map[String, Long]]()
     val coldMetrics = scala.collection.mutable.Map[String, Map[String, Long]]()
+    // queries that threw in any timed run: recorded as failed and left
+    // out of every total, so a time-to-failure never reads as a timing
+    val failed = scala.collection.mutable.Set.empty[String]
 
     def timed(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
@@ -83,6 +91,7 @@ object Bench {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
+        failed += name
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
@@ -150,18 +159,22 @@ object Bench {
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qs = jsonMap(results)
     val cold = jsonMap(coldResults)
+    val statusJson = results
+      .map { case (k, _) => s"\"" + k + "\":\"" + (if (failed(k)) "failed" else "ok") + "\"" }
+      .mkString("{", ",", "}")
+    val passed = results.filterNot { case (n, _) => failed(n) }
     val spreadJson =
       if (runs <= 1) ""
       else ",\"spread\":" + spread
         .map { case (k, (lo, hi)) => s"\"" + k + "\":[" + lo + "," + hi + "]" }
         .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = passed.map(_._2).sum
     // state BOTH totals in the artifact: the headline warm total (the
     // designed steady state) and the total with each artifact-backed
     // query's cold time substituted in — so baseline comparisons can't
     // quietly ignore the one-off model-fit cost (round-9 advice #8)
     val coldMap = coldResults.toMap
-    val totalWithCold = results
+    val totalWithCold = passed
       .map { case (n, v) => coldMap.getOrElse(n, v) }.sum
     val sfName = new java.io.File(sfDir).getName
     // self-describing run conditions (round-15 verdict: BENCH_LATEST
@@ -171,7 +184,7 @@ object Bench {
     // a median after the fact
     val condJson = s""","runs":$runs,"aggregation":"${if (runs > 1) "median" else "single_run"}","sf_name":"$sfName""""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_with_cold":$totalWithCold,"queries":$qs,"cold_queries":$cold$spreadJson$condJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_with_cold":$totalWithCold,"queries":$qs,"cold_queries":$cold,"status":$statusJson$spreadJson$condJson,"sf":"$sfDir"}"""
     println(line)
     // the driver's log tail truncates long stdout (BENCH_r10.json's
     // `tail` cut mid-JSON, `parsed` null) — persist the full per-query
@@ -243,7 +256,7 @@ object Bench {
     // (nothing may print after it), guaranteed to fit the tail window:
     // headline totals + the slowest queries + a pointer to the full
     // artifact (BENCH_LATEST.json, committed at repo root).
-    val slowest = results.sortBy(-_._2).take(12)
+    val slowest = passed.sortBy(-_._2).take(12)
       .map { case (k, v) => s"\"" + k + "\":" + math.rint(v * 1000) / 1000 }
       .mkString("{", ",", "}")
     // r17 verdict item 8 asked for the FULL warm per-query map on this
@@ -258,7 +271,7 @@ object Bench {
     // query whose delta could move a verdict; the tail ~140 all sit at
     // the 0.1-0.5 s per-query floor. Additions-only: the timed region,
     // query set and "value" are untouched.
-    val perQueryEntries: Seq[String] = results.sortBy(-_._2).map { case (k, v) =>
+    val perQueryEntries: Seq[String] = passed.sortBy(-_._2).map { case (k, v) =>
       s"\"" + k + "\":" + math.rint(v * 1000) / 1000
     }
     // prior-run context: the newest committed BENCH_FULL_r<N>.json for
@@ -293,7 +306,7 @@ object Bench {
     }
     def summaryLine(nPerQuery: Int): String = {
       val perQ = perQueryEntries.take(nPerQuery).mkString("{", ",", "}")
-      s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","total_with_cold":${math.rint(totalWithCold * 1000) / 1000},"n_queries":${results.size},"slowest":$slowest,"queries":$perQ$condJson$priorJson,"full":"$latestName","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","total_with_cold":${math.rint(totalWithCold * 1000) / 1000},"n_queries":${results.size},"n_failed":${failed.size},"slowest":$slowest,"queries":$perQ$condJson$priorJson,"full":"$latestName","sf":"$sfDir"}"""
     }
     // exact fit: drop trailing (fastest) entries until the whole line is
     // under the 1900-byte safety margin of the driver's 2000-char tail

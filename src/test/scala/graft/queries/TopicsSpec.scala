@@ -100,6 +100,77 @@ class TopicsSpec extends AnyFunSuite {
     assert(rows.map(_._2).distinct.length > 1, "coherence curve is flat")
   }
 
+  /** Runs `body` against a fresh, empty model root, so every shared
+    * model and per-doc artifact is fitted cold.
+    */
+  private def coldModels[T](body: => T): T = {
+    val root = java.nio.file.Files.createTempDirectory("graft-models-")
+    Topics.modelRootOverride = Some(root.toString)
+    Topics.clearModelCache()
+    try body
+    finally {
+      Topics.modelRootOverride = None
+      Topics.clearModelCache()
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    }
+  }
+
+  private def sweepRows(ks: Seq[Int]): Seq[(Int, Double)] =
+    Topics.ldaSweep(spark, dir, ks, maxIter = 5).collect()
+      .map(r => r.getInt(0) -> r.getDouble(1)).toSeq
+
+  test("concurrent sweep is bit-identical to fitting each k alone") {
+    val ks = Seq(2, 4, 6, 8, 10, 12, 14)
+    val c = Topics.corpus(spark, dir).cache()
+    val (swept, sweptWords) = coldModels {
+      val rows = sweepRows(ks)
+      // registry hits: the models the sweep fitted
+      val cv = Topics.sharedVectorizer(c, dir)
+      (rows, ks.map(k => Topics.topTopicWords(
+        Topics.sharedLda(cv.transform(c), dir, k = k, maxIter = 5), cv.vocabulary, 10)))
+    }
+    // each k alone: its own one-k sweep, and a direct fit on the plain
+    // uncached transform (tokens column included)
+    val alone = ks.flatMap(k => coldModels(sweepRows(Seq(k))))
+    val cv = Topics.fitVectorizer(c)
+    val aloneWords = ks.map(k => Topics.topTopicWords(
+      Topics.fitLda(cv.transform(c), k = k, maxIter = 5), cv.vocabulary, 10))
+    assert(swept == alone)
+    assert(sweptWords == aloneWords)
+  }
+
+  test("a failed per-k fit is rethrown and leaves no sweep thread alive") {
+    def sweepThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName == "topics-sweep" && t.isAlive)
+    val e = coldModels {
+      intercept[IllegalArgumentException](sweepRows(Seq(2, 1, 4)))
+    }
+    // LDA's own parameter check rejects k = 1
+    assert(e.getMessage.contains("invalid value 1"), e.getMessage)
+    // shutdown() lets idle workers exit; give them a moment to do so
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (sweepThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sweepThreads.isEmpty, sweepThreads.map(_.getName).mkString(", "))
+  }
+
+  test("m2 and m4 keep only the shared corpus cache, not their LDA input") {
+    val sc = spark.sparkContext
+    def leakedBy(run: => Unit): Seq[String] = {
+      val before = sc.getPersistentRDDs.keySet
+      run
+      sc.getPersistentRDDs.collect { case (id, r) if !before(id) => String.valueOf(r.name) }.toSeq
+    }
+    coldModels {
+      // each may add the corpus cache (m3/m5 reuse it); neither may keep
+      // a vectorized frame cached, nor an LDA-owned training copy
+      for (leaked <- Seq(leakedBy(Topics.m2DominantTopics(spark, dir).collect()),
+          leakedBy(Topics.m4LdaSweep(spark, dir).collect()))) {
+        assert(leaked.size <= 1, leaked.mkString(" | "))
+        assert(!leaked.exists(_.contains("features")), leaked.mkString(" | "))
+      }
+    }
+  }
+
   test("k=32: the reference's best published configuration trains and coheres") {
     // The reference's README reports its best coherence, c_v = 0.54, at
     // k = 32 (README.md:120) — a k the sweep grid (2..14) never touches.
