@@ -1,34 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json (the selected queries' DuckDB twins) for the DuckDB
+  * compare in tools/oracle_check.py. Exits 1, after writing everything
+  * else, when a selected query threw, a requested name is unknown or a
+  * sketch answer is outside its error bound; stderr names each one. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional trailing args = subset of query names (local iteration;
     // the driver passes exactly two and dumps the full suite)
     val (sfDir, outDir) = (args(0), args(1))
     val wanted = args.drop(2).toSet
-    // target environment is local[32] with 32 shuffle partitions (one
-    // per core; 200 would fragment these data sizes)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     val selected =
       if (wanted.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => wanted(n) }
+    // a query that throws, or a requested name that does not exist, fails
+    // the run: the exit status, not a missing output dir, reports it
+    val failed = scala.collection.mutable.ArrayBuffer.from(
+      (wanted -- SparkEntry.queries.keySet).toSeq.sorted)
+    failed.foreach(n => System.err.println(s"[verify] $n failed: no such query"))
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // drop a previous run's output first, so a query that fails before
+      // its write starts cannot leave a stale result behind
+      val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out.toString)
       catch { case e: Throwable =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // queries cache intermediates (shingle sets, corpora) and pin
@@ -63,9 +63,12 @@ object Verify {
       val bound = 3 * 0.05
       sketchChecks("q20_approx_distinct") =
         s"""{"max_rel_err":$maxRel,"bound":$bound,"ok":${maxRel <= bound}}"""
-      if (maxRel > bound)
+      if (maxRel > bound) {
+        failed += "q20_approx_distinct"
         System.err.println(s"[verify] q20 sketch OUT OF BOUND: $maxRel > $bound")
+      }
     } catch { case e: Throwable =>
+      failed += "q20_approx_distinct"
       System.err.println(s"[verify] q20 bound check failed: ${e.getMessage}") }
     if (selected.contains("q30_approx_percentiles")) try {
       import org.apache.spark.sql.functions._
@@ -91,9 +94,12 @@ object Verify {
       ev.unpersist(blocking = false)
       sketchChecks("q30_approx_percentiles") =
         s"""{"max_rank_violation":$maxViol,"bound":0.0,"ok":${maxViol == 0.0}}"""
-      if (maxViol > 0.0)
+      if (maxViol > 0.0) {
+        failed += "q30_approx_percentiles"
         System.err.println(s"[verify] q30 sketch OUT OF BOUND: rank violation $maxViol")
+      }
     } catch { case e: Throwable =>
+      failed += "q30_approx_percentiles"
       System.err.println(s"[verify] q30 bound check failed: ${e.getMessage}") }
     if (sketchChecks.nonEmpty)
       Files.writeString(Paths.get(s"$outDir/sketch_bounds.json"),
@@ -111,9 +117,13 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] failed: ${failed.distinct.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

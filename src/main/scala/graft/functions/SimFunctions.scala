@@ -73,4 +73,13 @@ object SimFunctions {
   /** L2 norm, same sequential fold (native VecNorm expression). */
   def l2Norm(c: Column): Column =
     GraftNative.column(graft.expressions.VecNorm(GraftNative.expression(c)))
+
+  /** The unit vector `v / max(nrm, 1e-12)` as an ml dense vector — the
+    * input ml k-means trains on (spherical k-means: euclidean cells then
+    * order identically to cosine). The floor maps a zero vector to
+    * zeros, not NaN.
+    */
+  def unitVector(v: Column, nrm: Column): Column =
+    org.apache.spark.ml.functions.array_to_vector(
+      transform(v, x => x / greatest(nrm, lit(1e-12))))
 }

@@ -921,7 +921,7 @@ object Dedup {
     * near-clones too, by multi-probe ([[d20ProbeMasks]]): probeDepth 1
     * lifts cos-0.90 recall 0.30 → 0.76 for 17× the (tiny) candidate
     * rate, depth 2 to 0.98 for 137× — measured against planted
-    * rotations in SigMultiProbe (SCALING.md round 15). The
+    * rotations (SCALING.md, "Round-15: SigWide multi-probe"). The
     * oracle-pinned narrow geometry remains the high-recall twin for
     * fixture-scale exhaustive probing.
     */
@@ -1095,12 +1095,9 @@ object Dedup {
     * (cell_c, cell_f), the frame a curation pipeline semi-joins against.
     */
   def semDedup(emb: DataFrame, thr: Double): DataFrame = {
-    import graft.functions.SimFunctions.dot
+    import graft.functions.SimFunctions.{dot, unitVector}
     import org.apache.spark.ml.linalg.{Vector => MlVector, Vectors}
-    val toUnitVecUdf = udf { (v: Seq[Double], n: Double) =>
-      Vectors.dense(v.map(x => x / math.max(n, 1e-12)).toArray)
-    }
-    val all = emb.withColumn("fv", toUnitVecUdf(col("v"), col("nrm"))).cache()
+    val all = emb.withColumn("fv", unitVector(col("v"), col("nrm"))).cache()
     val n = all.count()
     val (kc, kf) = semDedupPanels(n)
     // deterministic training sets: lowest vec_ids, not partition-order
@@ -1181,10 +1178,11 @@ object Dedup {
     * cells n/16 wide — quadratic pair scan), while assignment is
     * n·(kc+kf) ≈ n·2√k cosine rows through a map-side-combined argmax —
     * NOT the round-7 flat n·k cross join the judge graded weak. Measured
-    * (AssignProbe, local[32], dim 64): at n=4M the flat assignment takes
-    * 165.5 s vs 3.15 s two-level (52×), and the gap widens as √n. Both
-    * panel rules are pure integer expressions of count(*), so the DuckDB
-    * twin states them verbatim and the hash check covers them.
+    * (SURVEY.md's semantic-dedup row, local[32], dim 64): at n=4M the
+    * flat assignment takes 165.5 s vs 3.15 s two-level (52×), and the
+    * gap widens as √n. Both panel rules are pure integer expressions of
+    * count(*), so the DuckDB twin states them verbatim and the hash
+    * check covers them.
     */
   def d10SemDedupFixed(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.SimFunctions.{toDoubleVec, dot, l2Norm}
@@ -1675,11 +1673,11 @@ object Dedup {
     * oracle, ORDER BY stripped, wrapped as subqueries) unioned and
     * transitively closed by the d7 recursive CTE.
     *
-    * Composition receipt (graft.D18CompositionProbe, ×10 replica of
-    * sf0.1, 3-run medians): end-to-end is SUB-additive — 0.52× the sum
-    * of its timed parts — because the three generators share one
-    * corpus scan + tokenize subtree inside a single job where the
-    * standalone legs each pay it:
+    * Composition receipt (SCALING.md, "d18 composition receipt": ×10
+    * replica of sf0.1, 3-run medians): end-to-end is SUB-additive —
+    * 0.52× the sum of its timed parts — because the three generators
+    * share one corpus scan + tokenize subtree inside a single job where
+    * the standalone legs each pay it:
     * {{{
     * {"metric":"d18_composition","dir":"/tmp/graft-scale/x10","runs":3,
     *  "d2_minhash":112.341,"d3_simhash":7.214,"d5_winnow":8.292,
@@ -1842,8 +1840,9 @@ object Dedup {
     * proportional work is exactly one scan of `bands/` — 32 small rows
     * per corpus doc — and nothing else.
     *
-    * Measured (graft.D19IncrementalProbe: fixed sf0.1 batch, corpus
-    * replicated ×10 with near-dup perturbation, 3-run medians):
+    * Measured (SCALING.md, "d19 incremental-vs-rebuild receipt (round
+    * 12)": fixed sf0.1 batch, corpus replicated ×10 with near-dup
+    * perturbation, 3-run medians):
     * {{{
     * {"metric":"d19_incremental","f":10,"runs":3,
     *  "store_build_x1":2.776,"probe_stored_x1":1.6,"rebuild_inline_x1":1.323,
@@ -2010,9 +2009,10 @@ object Dedup {
     * columnar storage makes the "index read" a 12-byte-per-vector
     * column fetch, while a stored 4-rows-per-vector band table was
     * measured SLOWER to rescan per batch than recomputing bands from
-    * signatures (GateScaleProbe ×50: the banded layout put the stored
-    * probe behind the inline rebuild). Bonus: one table means the store
-    * append has no index/payload ordering hazard at all.
+    * signatures (the round-13 ×50 gate receipt in SCALING.md, fix 1
+    * "Stored band table → derived bands": the banded layout put the
+    * stored probe behind the inline rebuild). Bonus: one table means
+    * the store append has no index/payload ordering hazard at all.
     */
   def d20WriteStore(corpus: DataFrame, path: String,
       spec: SigSpec = SigNarrow): Unit = {
@@ -2088,13 +2088,13 @@ object Dedup {
     * regime: a cos-0.9 pair's per-band collision needs all 16 bits to
     * agree (~30% somewhere across 4 bands at depth 0); admitting
     * hamming ≤ d raises per-band hit probability from P(X=0) to
-    * P(X ≤ d), X ~ Binomial(bandBits, 1 − s) — measured in SigMultiProbe
-    * (SCALING.md round 15). Candidate volume scales by |masks| (17 at
-    * depth 1, 137 at depth 2 for 16-bit bands) on the ~2⁻¹⁶ base rate —
-    * still output-bound. Mask count is bounded policy data (≤ 1 +
-    * bandBits + bandBits²/2), and the expansion happens on the BATCH
-    * side of the equi-join only: the store scan, the join shape and the
-    * verify are untouched.
+    * P(X ≤ d), X ~ Binomial(bandBits, 1 − s) — measured against planted
+    * rotations (SCALING.md, "Round-15: SigWide multi-probe"). Candidate
+    * volume scales by |masks| (17 at depth 1, 137 at depth 2 for 16-bit
+    * bands) on the ~2⁻¹⁶ base rate — still output-bound. Mask count is
+    * bounded policy data (≤ 1 + bandBits + bandBits²/2), and the
+    * expansion happens on the BATCH side of the equi-join only: the
+    * store scan, the join shape and the verify are untouched.
     */
   private[graft] def d20ProbeMasks(bandBits: Int, depth: Int): Seq[Long] = {
     require(depth >= 0 && depth <= 2,

@@ -41,9 +41,9 @@ object Multimodal {
     mediaTableOf(Tables.documents(s, dir))
 
   /** [[mediaTable]]'s synthesis over an arbitrary documents frame — the
-    * single definition of the payload/format mapping, so probes that
-    * build media from replicated documents (GateScaleProbe) measure the
-    * exact workload the production gate sees.
+    * single definition of the payload/format mapping, so the media-gate
+    * scale receipts built from replicated documents (SCALING.md rounds
+    * 13–17) measured the exact workload the production gate sees.
     */
   def mediaTableOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id").as("media_id"),

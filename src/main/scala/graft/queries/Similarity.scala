@@ -187,15 +187,11 @@ object Similarity {
     */
   def ivfKmeans(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val NCELL = 16; val NPROBE = nprobe
-    import org.apache.spark.ml.linalg.Vectors
     // spherical k-means: train/assign on UNIT vectors so euclidean cells
     // order identically to cosine — the correct IVF quantizer for a
     // cosine search metric
-    val toUnitVecUdf = udf { (v: Seq[Double], n: Double) =>
-      Vectors.dense(v.map(x => x / math.max(n, 1e-12)).toArray)
-    }
     val all = vecs(s, dir)
-      .withColumn("fv", toUnitVecUdf(col("v"), col("nrm"))).cache()
+      .withColumn("fv", unitVector(col("v"), col("nrm"))).cache()
     // quantizer training on a bounded sample (the standard IVF practice:
     // faiss trains on ~256×ncells vectors) with random init — k-means||
     // init plus full-corpus Lloyd steps cost ~15 scheduled jobs for a

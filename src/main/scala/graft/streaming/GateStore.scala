@@ -651,13 +651,14 @@ private[graft] object GateStore {
   }
 
   /** Opt-in compact-every-K policy — the scheduling rule the
-    * GateCompactionProbe receipt recommends, runnable inline from a
-    * gate's foreachBatch: once the sentinel table holds `every` or more
-    * LIVE committed batch dirs, [[compact]] everything into the newest
-    * one. Keyed off the sentinel's OWN committed dirs (not the incoming
-    * batch id), so it composes with multi-store batches where a store
-    * may not receive a dir for every logical batch, and with replays —
-    * a re-delivered compacted id sees a small dir count and no-ops.
+    * compaction-scheduling receipt recommends (SCALING.md, "Round-14:
+    * WHEN to compact"), runnable inline from a gate's foreachBatch:
+    * once the sentinel table holds `every` or more LIVE committed batch
+    * dirs, [[compact]] everything into the newest one. Keyed off the
+    * sentinel's OWN committed dirs (not the incoming batch id), so it
+    * composes with multi-store batches where a store may not receive a
+    * dir for every logical batch, and with replays — a re-delivered
+    * compacted id sees a small dir count and no-ops.
     * Returns the target batch id when a compaction ran.
     *
     * Cost model (measured, SCALING.md round-14): per-batch probe time
@@ -672,7 +673,7 @@ private[graft] object GateStore {
     * the rewrite is footer-dominated and flat (the 1k-batch receipt);
     * past [[FullRewriteWarnBytes]] this logs loudly, and the production
     * answer is [[maybeCompactLeveled]] — bounded per-compaction cost
-    * (the 512-batch GateLeveledProbe receipt, SCALING.md round 15),
+    * (the 512-batch receipt, SCALING.md, "Round-15: leveled compaction"),
     * same verdicts, same replay envelope. The loud [[compact]]
     * preconditions (torn superseded dirs) propagate: under the
     * single-writer contract a torn dir is repaired by its own replay

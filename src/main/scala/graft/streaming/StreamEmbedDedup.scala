@@ -21,7 +21,8 @@ import graft.queries.Dedup
   * Store layout (the [[GateStore]] protocol) — ONE table, because the
   * probe derives its band index from the stored signatures at read
   * time (a column-pruned (vec_id, sig) scan beats rescanning a stored
-  * 4-rows-per-vector band table, measured in GateScaleProbe):
+  * 4-rows-per-vector band table, measured in SCALING.md's round-13
+  * fixed-batch gate receipts):
   * {{{
   *   store/sigs/batch=<id>/bucket=<k>   (vec_id, embedding, nrm, sig),
   *                                      bucketed by xxhash64(vec_id)%64 so the

@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Whole-family scale probe (round 11): materializes a ×F replica of a
   * fixture directory under /tmp and times a representative heavy slice
   * of `SparkEntry.queries` at ×1 and ×F, so the "would this hold at 10×
   * the data" question gets a measured answer per operator family
-  * instead of a per-part receipt (AssignProbe) only.
+  * instead of a per-part receipt only (the n=4M semantic-dedup
+  * assignment receipt, SURVEY.md's d9 row).
   *
   * Replication is referentially consistent: fact tables get per-replica
   * key offsets (orderkey/doc_id/vec_id/event_id); dimension tables are
@@ -56,22 +57,12 @@ object ScaleSuiteProbe {
       if (wanted.isEmpty) ProbeQueries
       else SparkEntry.queries.keys.toSeq.filter(wanted)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // core count honors SPARK_GRAFT_CPUS (default 32) so the ×10/×50
-    // probes can measure core-scaling (8 vs 32) — the r17 verdict's ask:
-    // sf0.1 wall-clock can no longer price parallelism (the 8-core
-    // driver run beat the 32-core one), so scale receipts must come
-    // from a size where cores matter.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("scale-suite-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // core count honors SPARK_GRAFT_CPUS (via LocalSession, default 32)
+    // so the ×10/×50 probes can measure core-scaling (8 vs 32) — the r17
+    // verdict's ask: sf0.1 wall-clock can no longer price parallelism
+    // (the 8-core driver run beat the 32-core one), so scale receipts
+    // must come from a size where cores matter.
+    val spark = LocalSession()
 
     /** ×f copies of `df`; key columns in `offsets` shift by
       * replica · (max+1) so every replica owns a disjoint key range.

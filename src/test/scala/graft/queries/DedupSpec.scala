@@ -511,10 +511,10 @@ class DedupSpec extends AnyFunSuite {
       s"row-count model: two-level $twoRows vs flat $flatRows not ≥5× apart")
     // wall-clock is info-only at this size: per-job scheduling overhead
     // (~0.1 s) swamps 6M codegen'd rows, so a timing assert here would
-    // measure the scheduler, not the work. AssignProbe (main, same two
-    // shapes) measures where compute dominates: at n=4M the flat rule
-    // takes 165.5 s vs two-level 3.15 s (52×) — the quadratic vs n·2√k
-    // cost model made visible.
+    // measure the scheduler, not the work. The n=4M receipt (same two
+    // shapes, SURVEY.md's semantic-dedup row) measures where compute
+    // dominates: at n=4M the flat rule takes 165.5 s vs two-level
+    // 3.15 s (52×) — the quadratic vs n·2√k cost model made visible.
     argmaxTime(Seq(panel(kc, false))) // warm the cache + codegen once
     val tTwo = argmaxTime(Seq(panel(kc, false), panel(kf, true)))
     val tFlat = argmaxTime(Seq(panel(kFlat, false)))
@@ -924,11 +924,12 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.d20ProbeMasks(16, 2).distinct.size == 137)
     intercept[IllegalArgumentException] { Dedup.d20ProbeMasks(16, 3) }
 
-    // sign-DIVERSE fixture (SigGeomProbe's finding: the sf embeddings
-    // are sign-degenerate — 2 distinct signatures corpus-wide — so they
-    // cannot exercise banding math). Plants at cos 0.90/0.95, exactly
-    // the near-dup regime SigWide's depth-0 recall is thin in (~30% /
-    // ~55% per SigSpec's binomial analysis).
+    // sign-DIVERSE fixture (SCALING.md's round-14 signature-geometry
+    // finding: the sf embeddings are sign-degenerate — 2 distinct
+    // signatures corpus-wide — so they cannot exercise banding math).
+    // Plants at cos 0.90/0.95, exactly the near-dup regime SigWide's
+    // depth-0 recall is thin in (~30% / ~55% per SigSpec's binomial
+    // analysis).
     val dims = 64
     val rnd = new scala.util.Random(20260816L)
     def vec(): Array[Double] = Array.fill(dims)(rnd.nextGaussian())

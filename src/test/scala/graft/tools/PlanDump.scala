@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for declared queries — the round's plan
@@ -8,27 +7,16 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: tools/run.sh graft.tools.PlanDump <sfDir> <outDir> <suffix> [names...]
   *
-  * Session config matches Bench exactly (local[$SPARK_GRAFT_CPUS], 32
-  * shuffle partitions, UTC, nanosAsLong, GraftExtensions), so the dumped
-  * plan is the one the bench actually executes. Iterative queries that
-  * run driver actions while BUILDING the frame (g1/g2, kmeans, d7)
-  * execute those rounds during the dump; the captured plan is the final
-  * frame's — noted in OPTIMIZATION_r17.md where it matters.
+  * Iterative queries that run driver actions while BUILDING the frame
+  * (g1/g2, kmeans, d7) execute those rounds during the dump; the
+  * captured plan is the final frame's — noted in OPTIMIZATION_r17.md
+  * where it matters.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
     val wanted = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     Files.createDirectories(Paths.get(outDir))
     val selected =
       if (wanted.isEmpty) graft.SparkEntry.queries

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Pipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,13 +30,8 @@ object RegenGoldens {
     StructField("images", ArrayType(StringType))))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the test session's settings, so the golden is what BbcCorpusSpec sees
+    val spark = graft.LocalSession(4)
 
     val res = "src/test/resources/bbc"
     val raw = spark.read.schema(rawSchema).json(s"$res/articles_raw.jsonl")

@@ -6,6 +6,9 @@ Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs the
 matching SQL from oracle_sql.json in DuckDB against the sfDir parquet tables,
 sorts columns by name and rows by all columns, and compares values.
+An oracle query whose output dir is absent, or lacks the _SUCCESS marker of a
+committed write, is a MISSING failure: a query that failed in Verify must not
+drop out of both counts.
 """
 import sys, os, json, math, time
 import duckdb
@@ -52,9 +55,15 @@ def main():
     # audited from this run's committed artifact instead of a separate pass
     oracle_times = {}
     results = {}
+    missing = sorted(k for k in oracle
+                     if not os.path.exists(os.path.join(out_dir, k, "_SUCCESS")))
+    for name in missing:
+        print(f"{'MISSING':18s} {name}: no committed output")
+        results[name] = {"status": "MISSING"}
+    n_fail += len(missing)
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
+        if not os.path.isdir(d) or name in missing:
             continue
         spark_df = pd.concat(
             [pd.read_parquet(os.path.join(d, f)) for f in os.listdir(d)
@@ -102,12 +111,13 @@ def main():
             print(f"{'PASS':18s} {name} rows={len(a)}")
             results[name] = {"status": "PASS", "rows": len(a)}
             n_pass += 1
-    summary = {"pass": n_pass, "fail": n_fail, "sf_dir": sf_dir,
+    summary = {"pass": n_pass, "fail": n_fail, "missing": len(missing),
+               "sf_dir": sf_dir,
                "oracle_times": oracle_times, "results": results}
     with open(os.path.join(out_dir, "oracle_check.json"), "w") as f:
         json.dump(summary, f, indent=1, sort_keys=True)
-    print(f"\n{n_pass} pass, {n_fail} fail "
-          f"(oracle total {sum(oracle_times.values()):.1f}s, "
+    print(f"\n{n_pass} pass, {n_fail} fail ({len(missing)} missing; "
+          f"oracle total {sum(oracle_times.values()):.1f}s, "
           f"per-query times in {out_dir}/oracle_check.json)")
     sys.exit(1 if n_fail else 0)
 
