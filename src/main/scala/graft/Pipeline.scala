@@ -15,9 +15,13 @@ import org.apache.spark.sql.functions._
   *
   * Plan shape: everything before the writes is narrow (map-only) except
   * the two anti-joins inside appendUnique — the same wide dependencies
-  * the reference hides in its unique Mongo index. Incremental by
-  * construction: re-running over an overlapping feed appends only the
-  * delta.
+  * the reference hides in its unique Mongo index. The link and article
+  * appends write different stores and share no data, so they run at
+  * the same time, and the process stage runs only on articles the
+  * store lacks (appendUnique's `step`). Incremental by construction:
+  * re-running over an overlapping feed appends only the delta. If one
+  * append fails, the other may still have landed; a re-run then
+  * appends only what is missing.
   */
 object Pipeline {
 
@@ -48,6 +52,13 @@ object Pipeline {
     * frames — the reference DAG's t2→t4 with the Mongo unique index
     * replaced by appendUnique's anti-join. Returns (newLinks,
     * newArticles), the reference's XCom doc counts.
+    *
+    * The two appends run concurrently on threads named `ingest-append`;
+    * both are awaited, and the first failure, links before articles,
+    * is rethrown. `process` runs as the article append's `step`, after
+    * the anti-join, so it must keep to that contract (row-wise, keeps
+    * `articleKey`). The two stores must be different paths: the
+    * single-writer contract of appendUnique holds per store.
     */
   def ingest(
       spark: SparkSession,
@@ -55,24 +66,31 @@ object Pipeline {
       articles: DataFrame, articleKey: String,
       linksPath: String, articlesPath: String,
       process: DataFrame => DataFrame): (Long, Long) = {
-    val newLinks = Sinks.appendUnique(spark, links, linksPath, linkKey)
-    val newArticles =
-      Sinks.appendUnique(spark, process(articles), articlesPath, articleKey)
-    (newLinks, newArticles)
+    require(linksPath != articlesPath,
+      s"links and articles need separate stores, both are $linksPath")
+    val legs = Seq(
+      () => Sinks.appendUnique(spark, links, linksPath, linkKey),
+      () => Sinks.appendUnique(spark, articles, articlesPath, articleKey,
+        step = process))
+    val counts = Concurrent.map(spark, "ingest-append", legs)(_())
+    (counts(0), counts(1))
   }
 
-  /** The fixture-table ingest run (links from the synthesized sitemap,
-    * articles from `documents`).
+  /** The fixture-table ingest run: one read of `documents` feeds both
+    * legs — links parsed from it as in x1, articles processed from it.
+    * `feedFilter` selects the feed's documents.
     */
   def ingestRun(
       spark: SparkSession,
       sfDir: String,
       linksPath: String,
       articlesPath: String,
-      feedFilter: DataFrame => DataFrame = identity): (Long, Long) =
+      feedFilter: DataFrame => DataFrame = identity): (Long, Long) = {
+    val docs = feedFilter(Tables.documents(spark, sfDir))
     ingest(spark,
-      feedFilter(queries.Extraction.x1SitemapParse(spark, sfDir)), "loc",
-      feedFilter(Tables.documents(spark, sfDir)), "doc_id",
+      queries.Extraction.x1Links(docs), "loc",
+      docs, "doc_id",
       linksPath, articlesPath,
       processArticles(_))
+  }
 }

@@ -35,19 +35,24 @@ object Extraction {
   /** X1/S2: sitemap <url><loc>…</loc><lastmod>…</lastmod></url> parse +
     * the news-URL substring predicate (O-P1, bbc_news_dag.py:32).
     */
-  def x1SitemapParse(s: SparkSession, dir: String): DataFrame = {
+  def x1SitemapParse(s: SparkSession, dir: String): DataFrame =
+    x1Links(Tables.documents(s, dir)).orderBy(col("doc_id"))
+
+  /** The x1 parse over any documents frame, without x1's presentation
+    * sort: (doc_id, loc, lastmod) of the news links.
+    */
+  def x1Links(docs: DataFrame): DataFrame = {
     val xml = concat(
       lit("<url><loc>https://www.bbc.com/"),
       when(col("doc_id") % 3 === 0, lit("sport/")).otherwise(lit("news/")),
       col("source"), lit("-"), col("doc_id").cast("string"),
       lit("</loc><lastmod>2022-0"), ((col("doc_id") % 9) + 1).cast("string"),
       lit("-15T12:00:00Z</lastmod></url>"))
-    Tables.documents(s, dir)
+    docs
       .select(col("doc_id"), xml.as("xml"))
       .select(col("doc_id"), expr("xml_fields(xml, 'loc', 'lastmod')").as("f"))
       .select(col("doc_id"), col("f.c0").as("loc"), col("f.c1").as("lastmod"))
       .filter(col("loc").contains("www.bbc.com/news/"))
-      .orderBy(col("doc_id"))
   }
 
   val x1Sql: String =

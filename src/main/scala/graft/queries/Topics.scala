@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Concurrent, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel}
 import org.apache.spark.ml.clustering.{LDA, LDAModel}
@@ -287,35 +287,14 @@ object Topics {
   private def ldaInput(cv: CountVectorizerModel, c: DataFrame): DataFrame =
     cv.transform(c).select(col("doc_id"), col("features")).cache()
 
-  /** Runs `fit` once per element of `ks` on a fixed pool of at most
-    * defaultParallelism daemon threads named `topics-sweep`, and
-    * returns the results in `ks` order. The pool is created per call:
-    * its threads are spawned by the caller, so they inherit the caller's
-    * Spark local properties (job group, scheduler pool). Every fit is
-    * awaited before the first failure, in `ks` order, is rethrown, so no
-    * fit outlives the call. Spark ML's CrossValidator fits independent
-    * models the same way.
-    */
-  private def fitConcurrently[T](s: SparkSession, ks: Seq[Int])(fit: Int => T): Seq[T] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(ks.size, s.sparkContext.defaultParallelism)),
-      (r: Runnable) => { val t = new Thread(r, "topics-sweep"); t.setDaemon(true); t })
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val futures = ks.map(k => Future(fit(k)))
-      futures.map(f => scala.util.Try(Await.result(f, Duration.Inf))).map(_.get)
-    } finally pool.shutdown()
-  }
-
   /** The reference's model-selection sweep (ipynb cells 8-9, lines
     * 346-375: k ∈ {2,4,…,14}, passes=20, coherence='c_v') over an
     * arbitrary k-grid: train LDA per k, score with mean c_v coherence
     * over the token corpus, emit (k, c_v).
     *
     * The per-k fits are independent, so they run concurrently (see
-    * [[fitConcurrently]]) over one cached compact input ([[ldaInput]]).
+    * [[Concurrent.map]], threads named `topics-sweep`) over one
+    * cached compact input ([[ldaInput]]).
     * Results stay deterministic: each fit is seeded and reads the same
     * partitions in the same row order, so every model, and therefore
     * every (k, c_v) row, is bit-identical to fitting that k alone.
@@ -332,7 +311,7 @@ object Topics {
     // bench measures the sweep QUERY (artifact loads + scoring), not
     // |ks| refits
     val wordsPerK =
-      try fitConcurrently(s, ks) { k =>
+      try Concurrent.map(s, "topics-sweep", ks) { k =>
         val lda = sharedLda(v, dir, k = k, maxIter = maxIter)
         (k, topTopicWords(lda, cv.vocabulary, 10))
       } finally v.unpersist(blocking = false)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Write-path operators (SURVEY §2.1): the reference's Mongo/CSV sinks
@@ -58,7 +58,8 @@ object Sinks {
     * 30-minute sequential schedule — and any Airflow/cron-style batch
     * cadence) gets exactly-once keys, re-feeding included; racing
     * writers need the store-level guarantee — [[appendUniqueConcurrent]],
-    * whose commit log serializes committers. SinksSpec pins both.
+    * whose commit log serializes committers. SinksSpec pins both. The
+    * contract is per store: appends to different paths may overlap.
     *
     * `partitionCol`: optional ingest-date-style layout column. The sink
     * is written partitionBy(partitionCol) and the anti-join's
@@ -66,33 +67,66 @@ object Sinks {
     * CONTRACT: the partition column must be functionally dependent on
     * the key (a re-fed row carries the same date — true of sitemap
     * lastmod, crawl date, event time), otherwise a duplicate living in a
-    * non-scanned partition would be re-appended. The batch's distinct
+    * non-scanned partition would be re-appended. The raw batch's distinct
     * partition values are collected to the driver — bounded by the feed's
     * date range (a daily run has 1-2), never row-scale.
+    *
+    * `step`: a per-row transform (the NLP process stage of an ingest)
+    * run after the anti-join and before the in-batch dedup, so it only
+    * sees rows the store lacks. CONTRACT: the step must be row-wise
+    * (filters and per-row maps, no aggregation or join) and must keep
+    * the key and partition columns unchanged. The anti-join on the key
+    * then commutes with it, so the appended rows equal those of
+    * appending `step(df)` — only the rows the anti-join drops are never
+    * processed.
+    *
+    * The fresh frame is not cached: its row count is a separate job,
+    * and Catalyst prunes every column the count does not need, so the
+    * count keeps only the key read, the anti-join and the step's
+    * filters. The step's other projections (the Scala UDFs of
+    * Pipeline.processArticles) run once, inside the write. The count
+    * stays exact, and an all-duplicate batch writes no file.
     */
   def appendUnique(spark: SparkSession, df: DataFrame, path: String,
-      key: String, partitionCol: Option[String] = None): Long = {
-    val deduped = df.dropDuplicates(key)
+      key: String, partitionCol: Option[String] = None,
+      step: DataFrame => DataFrame = identity): Long =
+    countThenWrite(freshRows(spark, df, path, key, partitionCol, step)) { w =>
+      partitionCol.fold(w)(pc => w.partitionBy(pc)).mode(SaveMode.Append).parquet(path)
+    }
+
+  /** The rows [[appendUnique]] writes: `df` anti-joined against the
+    * sink's keys, then `step`, then deduplicated on `key`.
+    */
+  private[graft] def freshRows(spark: SparkSession, df: DataFrame,
+      path: String, key: String, partitionCol: Option[String],
+      step: DataFrame => DataFrame): DataFrame = {
     // existence via the Hadoop FS API — java.io.File is wrong for any
     // URI-qualified path (file:/, hdfs://, s3a://) and would silently
     // skip the uniqueness check
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh =
+    val unseen =
       if (fs.exists(hPath)) {
         val pVals = partitionCol.toSeq.flatMap { pc =>
-          deduped.select(col(pc)).distinct().collect().map(_.get(0))
+          df.select(col(pc)).distinct().collect().map(_.get(0))
         }
-        deduped.join(existingKeys(spark, path, key, partitionCol, pVals),
+        df.join(existingKeys(spark, path, key, partitionCol, pVals),
           Seq(key), "left_anti")
-      } else deduped
-    val out = fresh.cache()
-    val n = out.count()
-    if (n > 0) {
-      val w = out.write.mode(SaveMode.Append)
-      partitionCol.fold(w)(pc => w.partitionBy(pc)).parquet(path)
-    }
-    out.unpersist()
+      } else df
+    step(unseen).dropDuplicates(key)
+  }
+
+  /** Counts `df` uncached (one pruned job), then runs `write` on it
+    * only when it has rows, and returns the count. The write recomputes
+    * `df`, so `df` must yield the same rows both times (its scans list
+    * their files when the frame is built). A count riding the write
+    * through `Dataset.observe` would come too late: a non-partitioned
+    * write of an empty frame commits a schema-only part file.
+    */
+  private def countThenWrite(df: DataFrame)(
+      write: DataFrameWriter[Row] => Unit): Long = {
+    val n = df.count()
+    if (n > 0) write(df.write)
     n
   }
 
@@ -238,12 +272,8 @@ object Sinks {
         spark.read.parquet(dataDirs.map(d => s"$path/$d"): _*)
           .select(col(key)),
         Seq(key), "left_anti")
-    val out = fresh.cache()
-    val n = out.count()
     val dataDir = s"data/${java.util.UUID.randomUUID()}"
-    if (n > 0) out.write.parquet(s"$path/$dataDir")
-    out.unpersist()
-    (dataDir, n)
+    (dataDir, countThenWrite(fresh)(_.parquet(s"$path/$dataDir")))
   }
 
   /** Step 4: atomically claim commit slot `n` for `dataDir`. Exactly
