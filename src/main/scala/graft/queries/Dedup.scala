@@ -320,7 +320,15 @@ object Dedup {
     * observed 170 s vs 3 s at sf0.001 — the cache() below is what pins
     * the signature column against that CollapseProject re-inline).
     */
-  def d2MinHashPairs(s: SparkSession, dir: String): DataFrame = {
+  def d2MinHashPairs(s: SparkSession, dir: String): DataFrame =
+    minHashPairs(s, dir).orderBy(col("id1"), col("id2"))
+
+  /** d2's verified (id1, id2, jaccard) pairs without the presentation
+    * sort: the clustering consumers (d7, d18) feed it straight into
+    * [[connectedComponentsWithRounds]], where `orderBy` would only add a
+    * range-partition sampling job and an exchange.
+    */
+  private[graft] def minHashPairs(s: SparkSession, dir: String): DataFrame = {
     // loader deliberately NOT fanned (re-measured r18, confirming the
     // r17 rejection): unlike d16 — whose win was the 15.8 MB pair-agg
     // exchange the doc_id partitioning eliminates — d2/d3/d5's pair
@@ -343,7 +351,6 @@ object Dedup {
         (size(col("sh1")) + size(col("sh2")) - col("c")))
       .filter(col("j") >= 0.5)
       .select(col("id1"), col("id2"), round(col("j"), 6).as("jaccard"))
-      .orderBy(col("id1"), col("id2"))
   }
 
   /** Oracle: exact all-pairs ≥ 0.5 — LSH recall at these parameters makes
@@ -685,11 +692,130 @@ object Dedup {
       |SELECT doc_id, n_grams, n_hit FROM hits
       |WHERE n_hit * 10 >= n_grams ORDER BY doc_id""".stripMargin
 
+  /** Connected components of the undirected `pairs` graph: labels every
+    * mentioned node (self-loop-only nodes included) with its component's
+    * minimum id. Pair lists only say "A≈B, B≈C"; dedup has to DROP the
+    * whole {A,B,C} group, which is transitive closure.
+    *
+    * Scale shape: the pair plan is materialized once, and the raw edge
+    * count rides that checkpoint (no extra job). The count then picks
+    * one of two paths, a run-time size decision like AQE's broadcast
+    * threshold rather than an option:
+    *  - at most [[DriverCcMaxEdges]] (2^20) edges: [[closeOnDriver]]
+    *    collects the edges as primitive arrays (one job, tens of MB of
+    *    driver heap at the bound), runs union-find, and pins the labels
+    *    with one checkpoint. Curation's near-dup graphs (hundreds of
+    *    edges) take this path: on a 4-core host the loop spent 1.6–2.0 s
+    *    of one-task jobs on a 285-edge graph that the driver pass closes
+    *    in 0.14–0.21 s.
+    *  - above it: [[starLoop]], the alternating large-star / small-star
+    *    rounds, which never bring an edge to the driver.
+    * Both give the same labels (CCSpec and DedupSpec pin it), and
+    * neither depends on partition or core count.
+    */
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 32): DataFrame =
+    connectedComponentsWithRounds(pairs, maxRounds)._1.df
+
+  /** The full result: the checkpointed label frame's release handle
+    * (callers that must bound executor storage — TrainingPipeline —
+    * release it once consumed) plus the rounds taken: the star loop's
+    * round count, or 1 for the driver path's single pass. `maxRounds`
+    * bounds the loop only.
+    */
+  def connectedComponentsWithRounds(pairs: DataFrame, maxRounds: Int = 32)
+      : (graft.Checkpoints.Checkpointed, Int) = {
+    // Materialize the caller's pair plan ONCE: the count that picks the
+    // path rides this checkpoint, and the path then reads the edges
+    // again (the loop twice), which from the raw plan would re-run the
+    // whole upstream generator (d2's band join + Jaccard verify; in d18
+    // all THREE generators). Any internal caches the generator
+    // materializes are captured by this handle and released once the
+    // chosen path no longer needs the raw edges.
+    val (raw, m) = graft.Checkpoints.eagerObserved(pairs.toDF("a", "b"),
+      count(lit(1)).as("n"))
+    if (!ccOnDriver(m.getLong(0))) starLoop(raw, maxRounds)
+    else try (closeOnDriver(raw.df), 1) finally raw.release()
+  }
+
+  /** Largest raw edge count closed on the driver: 2^20 edges are 16 MB
+    * of endpoint arrays, plus at most 2^21 node ids and parents.
+    */
+  private[queries] val DriverCcMaxEdges: Long = 1L << 20
+
+  private[queries] def ccOnDriver(edges: Long): Boolean = edges <= DriverCcMaxEdges
+
+  /** The star loop whatever the graph's size, for specs that exercise
+    * its rounds on graphs the size decision would close on the driver.
+    */
+  private[queries] def connectedComponentsLoop(pairs: DataFrame, maxRounds: Int = 32)
+      : (graft.Checkpoints.Checkpointed, Int) =
+    starLoop(graft.Checkpoints.eager(pairs.toDF("a", "b")), maxRounds)
+
+  /** Union-find over the pinned `raw` (a, b) edges. Node ids are sorted
+    * and deduplicated, so a node is its index in that array; unions keep
+    * the smaller index as the root, which makes every root its
+    * component's minimum id. Path halving keeps `find` near-constant.
+    * Ids never enter arithmetic (only comparisons and binary search), so
+    * ids near `Long.MaxValue` are safe. Ids must be integral and
+    * non-null.
+    */
+  private def closeOnDriver(raw: DataFrame): graft.Checkpoints.Checkpointed = {
+    import org.apache.spark.sql.types._
+    require(raw.schema.forall(f => f.dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }), s"connected components need integral ids, got ${raw.schema.simpleString}")
+    // the loop's label type: both endpoint columns widen to one id type
+    val idType = raw.select(greatest(col("a"), col("b"))).schema.head.dataType
+    val packs = raw.select(col("a").cast("long"), col("b").cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val (as, bs) = (Array.newBuilder[Long], Array.newBuilder[Long])
+        var sawNull = false
+        rows.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) sawNull = true
+          else { as += r.getLong(0); bs += r.getLong(1) }
+        }
+        Iterator((as.result(), bs.result(), sawNull))
+      }.collect()
+    require(!packs.exists(_._3), "connected components need non-null ids")
+    val src = packs.flatMap(_._1)
+    val dst = packs.flatMap(_._2)
+
+    val ids = src ++ dst
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (e <- src.indices) {
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, n, src(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, n, dst(e)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val label = Array.tabulate(n)(i => ids(find(i)))
+
+    // the labels ship to executors in slices of primitive arrays and are
+    // pinned as a checkpoint, never held in a plan as a LocalRelation
+    val s = raw.sparkSession
+    val slices = math.min(s.sparkContext.defaultParallelism, n / 65536 + 1)
+    def cut(k: Int): Int = (n.toLong * k / slices).toInt
+    val rows = s.sparkContext.parallelize((0 until slices).map(k =>
+        (java.util.Arrays.copyOfRange(ids, cut(k), cut(k + 1)),
+         java.util.Arrays.copyOfRange(label, cut(k), cut(k + 1)))), slices)
+      .flatMap { case (is, ls) =>
+        is.indices.iterator.map(j => org.apache.spark.sql.Row(is(j), ls(j))) }
+    graft.Checkpoints.eager(s.createDataFrame(rows, StructType(Seq(
+        StructField("id", LongType), StructField("label", LongType))))
+      .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label")))
+  }
+
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — labels every node of the undirected `pairs` graph with
-    * its component's minimum id. Pair lists only say "A≈B, B≈C"; dedup
-    * has to DROP the whole {A,B,C} group, which is transitive closure.
+    * SoCC'14) over the pinned `raw0` (a, b) edges, which it releases.
     *
     * Each round runs the two edge-rewriting steps:
     *  - large-star(u): every neighbor v > u is re-pointed at
@@ -710,27 +836,9 @@ object Dedup {
     * driver sees only per-round counts. Throws rather than returning
     * silently-unconverged labels if `maxRounds` is exhausted.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 32): DataFrame =
-    connectedComponentsWithRounds(pairs, maxRounds)._1.df
-
-  /** The full result: the checkpointed label frame's release handle
-    * (callers that must bound executor storage — TrainingPipeline —
-    * release it once consumed) plus the rounds the alternating
-    * algorithm took (CCSpec's O(log n) chain bound reads it without
-    * re-running the loop).
-    */
-  def connectedComponentsWithRounds(pairs: DataFrame, maxRounds: Int = 32)
+  private def starLoop(raw0: graft.Checkpoints.Checkpointed, maxRounds: Int)
       : (graft.Checkpoints.Checkpointed, Int) = {
     import graft.Checkpoints.{eager, eagerObserved}
-    // Materialize the caller's pair plan ONCE: `nodes` and `init` both
-    // derive from it, and checkpointing each directly from the raw plan
-    // re-ran the whole upstream generator (d2's band join + Jaccard
-    // verify; in d18 all THREE generators) a second time — the pair
-    // list itself is small, the plan that produces it is not. Any
-    // internal caches the generator materializes during this action are
-    // captured by this handle and released as soon as both derivations
-    // are pinned.
-    val raw0 = eager(pairs.toDF("a", "b"))
     val raw = raw0.df
     // EVERY mentioned node gets a label — including nodes whose only
     // edges are self-loops, which the edge canonicalization drops
@@ -827,9 +935,15 @@ object Dedup {
   /** D7: duplicate clusters — connected components over the d2 near-dup
     * pair graph via [[connectedComponentsWithRounds]], labelling every
     * member with its component's minimum doc_id (the cluster's canonical
-    * survivor). The pair frame feeds the loop's first checkpoint once —
-    * no cache needed; d2's internal caches are captured and released by
-    * that checkpoint's handle.
+    * survivor).
+    *
+    * Scale shape: d2's unsorted pairs ([[minHashPairs]]) feed the
+    * components' first checkpoint once — no cache, no presentation sort;
+    * d2's internal caches are captured and released by that
+    * checkpoint's handle. The near-dup graph has one edge per verified
+    * pair, so up to 2^20 pairs ([[DriverCcMaxEdges]]) it closes on the
+    * driver in one pass; beyond that the star loop runs O(log n)
+    * rounds of id-pair shuffles.
     */
   def d7DupClusters(s: SparkSession, dir: String): DataFrame =
     d7DupClustersHandle(s, dir)._1
@@ -839,7 +953,7 @@ object Dedup {
     */
   def d7DupClustersHandle(s: SparkSession, dir: String)
       : (DataFrame, graft.Checkpoints.Checkpointed) = {
-    val pairs = d2MinHashPairs(s, dir).select(col("id1"), col("id2"))
+    val pairs = minHashPairs(s, dir).select(col("id1"), col("id2"))
     val (cp, _) = connectedComponentsWithRounds(pairs)
     (cp.df.select(col("id").as("doc_id"), col("label").as("cluster"))
       .orderBy(col("doc_id")), cp)
@@ -1667,9 +1781,10 @@ object Dedup {
     * with its component's minimum id.
     *
     * Scale shape: the three generators' own documented sub-quadratic
-    * shapes, one distinct over (id1, id2) edges, then the d7
-    * alternating-star loop (one keyed shuffle + one released checkpoint
-    * per round). Twin: the three exact pair bases (each family's
+    * shapes, one distinct over (id1, id2) edges, then d7's components:
+    * up to 2^20 distinct edges ([[DriverCcMaxEdges]]) one driver
+    * union-find pass, beyond that the alternating-star loop (one keyed
+    * shuffle + one released checkpoint per round). Twin: the three exact pair bases (each family's
     * oracle, ORDER BY stripped, wrapped as subqueries) unioned and
     * transitively closed by the d7 recursive CTE.
     *
@@ -1688,14 +1803,17 @@ object Dedup {
     * re-running a generator or breaking a reused exchange.
     */
   def d18EnsembleClusters(s: SparkSession, dir: String): DataFrame = {
-    val pairs = d2MinHashPairs(s, dir).select(col("id1"), col("id2"))
-      .unionByName(d3SimHashPairs(s, dir).select(col("id1"), col("id2")))
-      .unionByName(d5WinnowPairs(s, dir).select(col("id1"), col("id2")))
-      .distinct()
-    val (cp, _) = connectedComponentsWithRounds(pairs)
+    val (cp, _) = connectedComponentsWithRounds(d18Edges(s, dir))
     cp.df.select(col("id").as("doc_id"), col("label").as("cluster"))
       .orderBy(col("doc_id"))
   }
+
+  /** d18's edge set: the distinct union of the three generators' pairs. */
+  private[queries] def d18Edges(s: SparkSession, dir: String): DataFrame =
+    minHashPairs(s, dir).select(col("id1"), col("id2"))
+      .unionByName(d3SimHashPairs(s, dir).select(col("id1"), col("id2")))
+      .unionByName(d5WinnowPairs(s, dir).select(col("id1"), col("id2")))
+      .distinct()
 
   val d18Sql: String = {
     def strip(sql: String): String = sql.substring(0, sql.lastIndexOf("ORDER BY"))

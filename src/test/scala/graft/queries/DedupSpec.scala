@@ -635,6 +635,20 @@ class DedupSpec extends AnyFunSuite {
     assert(ens.size >= d7.size)
   }
 
+  test("d7 and d18 labels from the driver path equal the star loop's row for row") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def viaLoop(edges: org.apache.spark.sql.DataFrame) = {
+      assert(Dedup.ccOnDriver(edges.count()), "the fixture graph closes on the driver")
+      val (cp, _) = Dedup.connectedComponentsLoop(edges)
+      try rows(cp.df.orderBy(col("id"))) finally cp.release()
+    }
+    val d7 = rows(Dedup.d7DupClusters(spark, dir))
+    assert(d7.nonEmpty)
+    assert(d7 == viaLoop(Dedup.minHashPairs(spark, dir).select(col("id1"), col("id2"))))
+    assert(rows(Dedup.d18EnsembleClusters(spark, dir)) == viaLoop(Dedup.d18Edges(spark, dir)))
+  }
+
   test("d19 persisted-index round-trip and planted batch clone") {
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 10 =!= 7)
