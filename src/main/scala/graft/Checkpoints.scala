@@ -90,10 +90,13 @@ object Checkpoints {
     * whose building blocks cache internally (e.g. the MinHash banding's
     * signature cache) and whose result is fully on disk when `work`
     * returns — nothing in memory is needed afterwards, so everything
-    * the leg pinned is released. Not safe under concurrent Spark
-    * activity on the same session (another thread's fresh caches would
-    * be swept too); the streaming gates run one micro-batch at a time,
-    * which is exactly the single-threaded shape this assumes.
+    * the leg pinned is released. Concurrent legs started and joined
+    * inside `work` are fine — the sweep brackets them, e.g. the
+    * concurrent payload appends of
+    * [[graft.TrainingPipeline.curateIncrementalBatch]]. Spark activity
+    * from threads OUTSIDE the sweep on the same session is not: their
+    * fresh caches would be swept too. The streaming gates run one
+    * micro-batch at a time, so nothing else runs beside their sweeps.
     */
   def sweep[T](spark: org.apache.spark.sql.SparkSession)(work: => T): T = {
     val sc = spark.sparkContext

@@ -34,7 +34,7 @@ object TrainingPipeline {
 
   /** Test-only fault injection for the concurrent payload appends
     * ([[graft.streaming.GateStore.leveledFault]]'s doctrine): called
-    * with the leg index at the start of each payload-append thread, so
+    * with the leg index at the start of each payload-append leg, so
     * a spec can hold a leg open (an interruptible sleep) and cancel
     * the batch mid-append deterministically — pinning the cancellation
     * envelope (jobs cancelled, no sentinel, replay repairs) instead of
@@ -487,16 +487,19 @@ object TrainingPipeline {
     * gate's multi-probe recall dial ([[Dedup.d20ProbeDirs]]) and
     * `mediaProbeDepth` the media gate's ([[Multimodal.mm9Probe]];
     * depth 1 certifies the full hamming-6 radius).
-    * `foldWrites = true` shrinks the per-batch job floor: verdicts + chunks
-    * land as ONE kind-partitioned write under `outDir/curated/batch=
-    * <id>` instead of two jobs (read them back via [[readVerdicts]] /
-    * [[readChunks]] — row-identical to the flat layout, spec-pinned),
-    * and the three stores' PAYLOAD appends (shingles / sigs / media
-    * bands) are submitted concurrently — the append-order contract
-    * only sequences payloads BEFORE the text-bands sentinel, not among
-    * themselves, so the sink still joins all payload jobs before the
-    * sentinel write. Same job count on the appends, one fewer publish
-    * job, and the payload jobs overlap instead of queueing.
+    * `foldWrites` selects only the publish layout. `true` lands
+    * verdicts + chunks as ONE kind-partitioned write under
+    * `outDir/curated/batch=<id>` instead of two jobs (read them back via
+    * [[readVerdicts]] / [[readChunks]] — row-identical to the flat
+    * layout, spec-pinned): one fewer publish job per batch.
+    *
+    * The stores' PAYLOAD appends (shingles / sigs / media bands) always
+    * run concurrently through [[Concurrent.map]]: the append-order
+    * contract only sequences payloads BEFORE the text-bands sentinel, not
+    * among themselves, so all payload legs are joined before the
+    * sentinel write. Interrupting the caller cancels the legs' Spark
+    * jobs; the batch then fails before its sentinel with the interrupt
+    * flag restored, and its replay repairs it.
     */
   def curateIncrementalBatch(s: SparkSession, batch: DataFrame,
       batchId: Long, storeDir: String, benchDir: String, outDir: String,
@@ -544,13 +547,6 @@ object TrainingPipeline {
           withLocks(rest)(body))
         ()
     }
-    // the payload-append cancellation path defers its interrupt-flag
-    // restore to THIS outermost frame: restoring before the throw would
-    // let the sweep/lock finallys' own blocking calls (unpersist's
-    // askSync, marker I/O) see the flag, throw a fresh
-    // InterruptedException that REPLACES the batch's real failure, and
-    // consume the flag on the way
-    var deferredInterrupt = false
     try withLocks(Seq(storeDir) ++ embedStoreDir ++ mediaStoreDir) {
     // exception safety: the per-stage and per-probe releases below run
     // on the SUCCESS path only; a mid-batch failure (and its
@@ -680,8 +676,8 @@ object TrainingPipeline {
       // 4. store appends — shingles/sigs/media bands first, TEXT bands
       //    (the batch's one replay sentinel) dead last. The contract
       //    orders payloads BEFORE the sentinel, not among themselves:
-      //    under foldWrites the three payload jobs run concurrently and
-      //    are ALL joined before the sentinel write starts.
+      //    the payload jobs run concurrently and are ALL joined before
+      //    the sentinel write starts.
       Checkpoints.sweep(s) {
         val sh = Dedup.shingleSetsOf(clean).cache()
         val payloadAppends: Seq[() => Unit] = Seq(
@@ -708,106 +704,25 @@ object TrainingPipeline {
                 .parquet(s"$mStore/bands/batch=$batchId"))
             case _ => None
           }).flatten
-        if (foldWrites && payloadAppends.size > 1) {
-          // concurrent job submission is thread-safe in Spark; a failure
-          // in ANY payload leg must still fail the batch BEFORE the
-          // sentinel lands (rethrown after the join), so the replay
-          // envelope is untouched. Losing failures attach as suppressed
-          // on the first; an interrupt during join() is deferred —
-          // recorded, converted into a job-group cancellation of every
-          // leg's Spark jobs, and re-delivered with the flag restored
-          // after the legs wind down (no leg's WRITE may outlive this
-          // call, racing the sentinel or the replay).
-          val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
-          val jobGroup =
-            s"graft-payload-append-$batchId-${java.util.UUID.randomUUID()}"
-          val threads = payloadAppends.zipWithIndex.map { case (a, i) =>
-            val t = new Thread(() => {
-              // job group (thread-local): cancellation must stop the
-              // leg's SPARK JOBS, not just its thread — an interrupted
-              // thread dies while its submitted write keeps running
-              // detached, racing the replayed batch's overwrite of the
-              // very same batch=$batchId directory
-              s.sparkContext.setJobGroup(jobGroup,
-                s"payload append batch=$batchId leg=$i",
-                interruptOnCancel = true)
-              try { payloadFault(i); a() } catch { case x: Throwable =>
-                if (!failure.compareAndSet(null, x))
-                  failure.get().addSuppressed(x)
-              } finally s.sparkContext.clearJobGroup()
-            }, s"graft-payload-append-$batchId-$i")
-            // daemon: a leg wedged on non-Spark I/O must not keep the
-            // JVM alive past the driver
-            t.setDaemon(true)
-            t
-          }
-          threads.foreach(_.start())
-          // join with a DEFERRED, JOB-CANCELLING interrupt: the first
-          // interrupt cancels the legs' job group (the Spark writes
-          // themselves stop — nothing keeps writing detached) and
-          // interrupts the threads; all legs then share ONE grace
-          // deadline (repeated interrupts do NOT re-arm it) before the
-          // join is abandoned — with the jobs already cancelled, an
-          // abandoned leg can no longer race the replay's overwrite.
-          var interrupted: InterruptedException = null
-          var graceDeadlineNanos = 0L
-          def graceLeftMs: Long =
-            (graceDeadlineNanos - System.nanoTime()) / 1000000L
-          def cancelLegs(): Unit = {
-            // ...AndFutureJobs: a leg still in query planning when the
-            // cancel lands would otherwise submit its write AFTER the
-            // sweep and run it detached; future-job cancellation kills
-            // it at submission (the group is per-batch, never reused).
-            // Swallow a stopping-context error: then there are no live
-            // jobs to cancel anyway.
-            try s.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-            catch { case _: Throwable => () }
-            threads.foreach(_.interrupt())
-          }
-          threads.foreach { t =>
-            var done = false
-            while (!done) {
-              // monotonic deadline (nanoTime): a wall-clock step must
-              // not stretch or collapse the grace window
-              val wait =
-                if (interrupted == null) 0L else math.max(1L, graceLeftMs)
-              try {
-                t.join(wait)
-                done = interrupted == null || !t.isAlive || graceLeftMs <= 0
-              } catch { case ie: InterruptedException =>
-                if (interrupted == null) {
-                  interrupted = ie
-                  graceDeadlineNanos = System.nanoTime() + 30000L * 1000000L
-                }
-                cancelLegs()
-              }
-            }
-            if (t.isAlive)
-              log.warn(s"payload append ${t.getName} still running after " +
-                "the 30 s cancellation grace — abandoning the join " +
-                "(daemon thread, its future jobs cancelled with the " +
-                "group); the batch fails before its sentinel, so replay " +
-                "repairs it")
-          }
-          // belt-and-braces final sweep: every leg that exited can no
-          // longer submit, and any abandoned leg's future submissions
-          // die at the cancelled group
-          if (interrupted != null) {
-            cancelLegs()
-            deferredInterrupt = true
-          }
-          if (failure.get() != null) {
-            if (interrupted != null) failure.get().addSuppressed(interrupted)
-            throw failure.get()
-          }
-          if (interrupted != null) throw interrupted
-        } else payloadAppends.foreach(_())
+        // a failed or cancelled payload leg fails the batch before the
+        // sentinel lands, so the replay envelope is untouched
+        Concurrent.map(s, s"graft-payload-append-$batchId",
+            payloadAppends.indices) { i => payloadFault(i); payloadAppends(i)() }
         Dedup.minhashBandsSpec(sh, mhSpec).write.mode("overwrite")
           .parquet(s"$storeDir/bands/batch=$batchId")
       }
       stage.releaseLast()
     }
-    } finally if (deferredInterrupt) Thread.currentThread().interrupt()
+    } catch { case t: Throwable
+        if (t +: t.getSuppressed.toSeq).exists(_.isInstanceOf[InterruptedException]) =>
+      // the interrupt flag is restored HERE, after the sweep/lock
+      // finallys: set any earlier, it would let their own blocking calls
+      // (unpersist's askSync, marker I/O) throw a fresh
+      // InterruptedException that REPLACES the batch's real failure, and
+      // consume the flag on the way
+      Thread.currentThread().interrupt()
+      throw t
+    }
   }
 
   /** One [[graft.streaming.GateStore.maintain]] pass over all three of

@@ -69,6 +69,10 @@ object StreamCuration {
     * foreachBatch) is a byte-identical no-op via the TEXT store's
     * batch sentinel; all three stores are claimed for `owner` up front
     * so a second query cannot interleave ([[GateStore.claimOwner]]).
+    * `foldWrites` selects only the publish layout (folded verdicts +
+    * chunks, one job fewer); the payload appends always run
+    * concurrently and are all joined before the text-bands sentinel
+    * (see curateIncrementalBatch).
     *
     * This is the streaming face of the reference's 30-minute DAG
     * running ingest+process as one unit (bbc_news_dag.py:144-152),
