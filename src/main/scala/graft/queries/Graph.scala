@@ -73,15 +73,9 @@ object Graph {
     * materialized checkpoint holds (id, rank, |rank − prev|) and the
     * L1 delta is a partial-agg sum over the just-pinned in-memory
     * blocks — no recompute, no extra shuffle of corpus-sized state.
-    * Stop at Σ|r_t − r_{t−1}| < n·nodeTol or maxIters.
-    */
-  private[queries] def pageRankFrame(nodes: DataFrame, edges: DataFrame,
-      maxIters: Int = PrMaxIters,
-      nodeTol: Double = PrNodeTol): DataFrame =
-    pageRankConverged(nodes, edges, maxIters, nodeTol)._1
-
-  /** As [[pageRankFrame]], additionally returning the number of rounds
-    * actually run — GraphSpec pins that this varies with structure.
+    * Stop at Σ|r_t − r_{t−1}| < n·nodeTol or maxIters. Returns the
+    * ranks and the number of rounds actually run — GraphSpec pins that
+    * this varies with structure.
     *
     * Round-17 loop slimming (guide §2.4 — remove per-round shuffles the
     * loop doesn't need):
@@ -336,14 +330,10 @@ object Graph {
     * final authority column) is deduplicated by ReuseExchange — the
     * shuffle runs once. The checkpoint holds (id, hub, auth, |Δa|);
     * superseded blocks are released, so executor storage carries one
-    * copy of the state at any time.
-    */
-  private[queries] def hitsFrame(nodes: DataFrame, edges: DataFrame,
-      maxIters: Int = PrMaxIters,
-      nodeTol: Double = PrNodeTol): DataFrame =
-    hitsConverged(nodes, edges, maxIters, nodeTol)._1
-
-  /** Round-17 loop slimming, mirroring [[pageRankConverged]]'s:
+    * copy of the state at any time. Returns the (id, authority, hub)
+    * frame and the number of rounds actually run.
+    *
+    * Round-17 loop slimming, mirroring [[pageRankConverged]]'s:
     * out-/in-degrees are ATTACHED to the pinned edge row once (the two
     * per-round joins against corpus-sized degree tables are gone), and
     * BOTH dangling masses are driver-side scalar recurrences — no

@@ -63,12 +63,6 @@ private[graft] object GateStore {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** [[maybeCompact]] rewrites the FULL store each time it fires; past
-    * this many merged input bytes per compaction, surface the O(N²)
-    * amplification loudly and point at the leveled policy.
-    */
-  private val FullRewriteWarnBytes: Long = 256L * 1024 * 1024
-
   /** Claim exclusive WRITE ownership of a gate store, loudly.
     * [[runBatch]] assumes one writer per store (true under a single
     * streaming query); two queries pointed at the same store would
@@ -427,11 +421,11 @@ private[graft] object GateStore {
   /** Run `body` holding the store's advisory writer/compaction lock —
     * the mutual exclusion that lets out-of-band [[maintain]] overlap a
     * live writer safely: batches ([[runBatch]], the tri-gate batch) and
-    * compactions ([[compact]], [[maybeCompact]],
-    * [[maybeCompactLeveled]], and through the latter [[maintain]]) all
-    * take it, so a maintenance fold can never interleave with a probe
-    * or append mid-batch, and two compactions can never race each
-    * other's `_compact_tmp` staging and renames.
+    * compactions ([[compact]], [[maybeCompactLeveled]], and through
+    * the latter [[maintain]]) all take it, so a maintenance fold can
+    * never interleave with a probe or append mid-batch, and two
+    * compactions can never race each other's `_compact_tmp` staging
+    * and renames.
     *
     * Semantics by caller kind: MANDATORY work (a batch, a direct
     * compact call) blocks up to [[LockWaitMs]] then THROWS with the
@@ -650,66 +644,6 @@ private[graft] object GateStore {
     ()
   }
 
-  /** Opt-in compact-every-K policy — the scheduling rule the
-    * compaction-scheduling receipt recommends (SCALING.md, "Round-14:
-    * WHEN to compact"), runnable inline from a gate's foreachBatch:
-    * once the sentinel table holds `every` or more LIVE committed batch
-    * dirs, [[compact]] everything into the newest one. Keyed off the
-    * sentinel's OWN committed dirs (not the incoming batch id), so it
-    * composes with multi-store batches where a store may not receive a
-    * dir for every logical batch, and with replays — a re-delivered
-    * compacted id sees a small dir count and no-ops.
-    * Returns the target batch id when a compaction ran.
-    *
-    * Cost model (measured, SCALING.md round-14): per-batch probe time
-    * grows with the live dir count (listing + N-way union analysis +
-    * N file footers), while one compaction at fixture scale costs
-    * roughly a handful of batches — so small `every` keeps the probe
-    * flat for the price of amortized ~1/every compactions per batch.
-    * HONEST CAVEAT for very long streams: [[compact]] merges EVERYTHING
-    * below the target, including the previous compaction's output, so
-    * each compaction rewrites the full store — cumulative write
-    * amplification is O(N²/every) in stream length. At fixture scale
-    * the rewrite is footer-dominated and flat (the 1k-batch receipt);
-    * past [[FullRewriteWarnBytes]] this logs loudly, and the production
-    * answer is [[maybeCompactLeveled]] — bounded per-compaction cost
-    * (the 512-batch receipt, SCALING.md, "Round-15: leveled compaction"),
-    * same verdicts, same replay envelope. The loud [[compact]]
-    * preconditions (torn superseded dirs) propagate: under the
-    * single-writer contract a torn dir is repaired by its own replay
-    * BEFORE any later batch runs, so hitting one here means the store
-    * was corrupted outside the protocol and wedging is the right call.
-    */
-  def maybeCompact(spark: SparkSession, storeDir: String,
-      tables: Seq[(String, Seq[String])], every: Int): Option[Long] = {
-    require(every >= 2, s"compactEvery must be >= 2, got $every")
-    withStoreLock(storeDir, "maybeCompact", blocking = false) {
-      val sentinel = tables.head._1
-      val committed = listBatchDirs(new File(storeDir, sentinel))
-        .filter { case (_, p) => new File(p, "_SUCCESS").exists() }
-      if (committed.size >= every) {
-        val upTo = committed.last._1
-        // the full-rewrite policy's amplification guard (sized BEFORE the
-        // merge): every store byte below the target is about to be
-        // rewritten; past the threshold that is no longer footer-dominated
-        // maintenance but the O(N²/every) curve — say so, loudly enough
-        // for a long-running stream's logs to surface it
-        val rewriteBytes = tables.map { case (t, _) =>
-          listBatchDirs(new File(storeDir, t))
-            .filter(_._1 < upTo).map(d => treeBytes(new File(d._2))).sum
-        }.sum
-        if (rewriteBytes > FullRewriteWarnBytes)
-          log.warn(s"maybeCompact($storeDir, every=$every) is rewriting " +
-            s"$rewriteBytes bytes (> $FullRewriteWarnBytes): the full-rewrite " +
-            "policy re-merges every prior compaction's output, O(N²/every) " +
-            "over the stream — switch to maybeCompactLeveled for bounded " +
-            "per-compaction cost")
-        compactFiltered(spark, storeDir, upTo, tables, _ => true)
-        Some(upTo)
-      } else None
-    }.flatten
-  }
-
   /** One table's live-state summary inside a gate store. */
   final case class TableStats(table: String, liveDirs: Int,
       committedDirs: Int, dataLessDirs: Int, bytes: Long, files: Int)
@@ -783,7 +717,7 @@ private[graft] object GateStore {
 
   /** When [[maintain]] compacts, everything it needs to decide with:
     * fold fresh dirs once `compactEvery` of them accumulate (the same
-    * rule the inline leveled policy runs), or — the out-of-band
+    * rule the inline `compactEvery` policy runs), or — the out-of-band
     * backstop — force a fold of whatever fresh dirs exist (≥ 2) once
     * the sentinel's LIVE dir count or the store's total bytes crosses
     * its ceiling, so a store whose writer never reaches `compactEvery`
@@ -847,14 +781,13 @@ private[graft] object GateStore {
     * [[LockWaitMs]] then throws into the streaming engine's retry.
     * Scheduling the cron in the query's trigger gaps is therefore a
     * latency optimization, no longer a safety requirement; combining
-    * maintain with a `compactLeveled = true` sink is likewise safe —
+    * maintain with a sink's inline `compactEvery` is likewise safe —
     * whichever compaction loses the lock race defers.
     */
   def maintain(spark: SparkSession, storeDir: String,
       tables: Seq[(String, Seq[String])],
       policy: MaintenancePolicy = MaintenancePolicy()): MaintenanceReport = {
-    require(policy.compactEvery >= 2,
-      s"compactEvery must be >= 2, got ${policy.compactEvery}")
+    requireCompactEvery(policy.compactEvery)
     val before = describe(storeDir, tables)
     before.owner.foreach { o =>
       if (!policy.onBehalfOf.contains(o)) throw new IllegalStateException(
@@ -948,35 +881,15 @@ private[graft] object GateStore {
     replaceMarker(new File(storeDir), LevelsMarker, body)
   }
 
-  /** LEVELED compact-every-K — the bounded-write-amplification policy
-    * [[maybeCompact]]'s own caveat names, and the production default for
-    * long streams. Shape (the LSM/tiered design every lakehouse table
-    * service converges on, sized here in batch dirs instead of bytes):
-    *
-    *  - once `every` FRESH batch dirs accumulate (dirs that are not a
-    *    recorded level run), merge just those into the newest of them —
-    *    a LEVEL-0 run. Previous runs are NOT inputs, so a level-0
-    *    compaction always rewrites exactly `every` batches' rows no
-    *    matter how large the store has grown — per-compaction cost is
-    *    O(every), vs [[maybeCompact]]'s O(store).
-    *  - once `fanout` runs exist at level L, merge them into the newest
-    *    of them — a level-(L+1) run. Amortized write cost per batch is
-    *    O(log_fanout N) rewrites over the stream's life (each row is
-    *    re-merged once per level it climbs), vs O(N/every) under the
-    *    full-rewrite policy.
-    *  - probes are untouched: they read the union of live dirs, and the
-    *    live-dir count stays ≤ (every − 1) + fanout·levels — bounded
-    *    logarithmically instead of by the last full rewrite.
-    *
-    * Correctness rests on two properties the protocol already grants:
-    * probes read ANY union of live dirs (so which dirs rows live in is
-    * free), and the `_compacted_up_to` marker may over-cover ids whose
-    * dirs survive ([[compactFiltered]]'s note). The `_levels` file is
-    * advisory ([[readLevels]]); every merge itself runs under
-    * [[compact]]'s crash envelope. Runs cascade within one call (a
-    * level-0 merge can trigger a level-1 merge immediately); returns
-    * the target ids of every compaction performed.
+  /** The one bound on a compact-every-K cadence: a fold needs at least
+    * two dirs. Gate sinks call it at construction, so a bad
+    * `compactEvery` refuses before the stream starts instead of after
+    * its first batch has committed (each replay would then no-op and
+    * throw again, wedging the stream).
     */
+  private[graft] def requireCompactEvery(every: Int): Unit =
+    require(every >= 2, s"compactEvery must be >= 2, got $every")
+
   /** TEST-ONLY fault injection for the mid-cascade crash specs: called
     * at each tear point inside [[maybeCompactLeveled]] with a point
     * name — `level0-merged` (level-0 fold committed, `_levels` not yet
@@ -987,10 +900,51 @@ private[graft] object GateStore {
     */
   private[graft] var leveledFault: String => Unit = _ => ()
 
+  /** The compact-every-K policy — what `compactEvery` runs inline
+    * from every gate sink's foreachBatch, and what [[maintain]] runs
+    * out of band. The schedule is the one the compaction-scheduling
+    * receipt recommends (SCALING.md, "Round-14: WHEN to compact"),
+    * keyed off the sentinel table's OWN committed dirs (not the
+    * incoming batch id), so it composes with multi-store batches where
+    * a store may not receive a dir for every logical batch, and with
+    * replays — a re-delivered merged id adds no fresh dir and no-ops.
+    * Shape (the LSM/tiered design every lakehouse table service
+    * converges on, sized here in batch dirs instead of bytes):
+    *
+    *  - once `every` FRESH batch dirs accumulate (dirs that are not a
+    *    recorded level run), merge just those into the newest of them —
+    *    a LEVEL-0 run. Previous runs are NOT inputs, so a level-0
+    *    compaction always rewrites exactly `every` batches' rows no
+    *    matter how large the store has grown — per-compaction cost is
+    *    O(every), never O(store).
+    *  - once `fanout` runs exist at level L, merge them into the newest
+    *    of them — a level-(L+1) run. Amortized write cost per batch is
+    *    O(log_fanout N) rewrites over the stream's life (each row is
+    *    re-merged once per level it climbs), where re-merging the whole
+    *    store every K batches would cost O(N/every) (SCALING.md,
+    *    "Round-15: leveled compaction").
+    *  - probes are untouched: they read the union of live dirs, and the
+    *    live-dir count stays ≤ (every − 1) + fanout·levels — bounded
+    *    logarithmically in stream length.
+    *
+    * Correctness rests on two properties the protocol already grants:
+    * probes read ANY union of live dirs (so which dirs rows live in is
+    * free), and the `_compacted_up_to` marker may over-cover ids whose
+    * dirs survive ([[compactFiltered]]'s note). The `_levels` file is
+    * advisory ([[readLevels]]); every merge itself runs under
+    * [[compact]]'s crash envelope, and its loud preconditions (torn
+    * superseded dirs) propagate: under the single-writer contract a
+    * torn dir is repaired by its own replay BEFORE any later batch
+    * runs, so hitting one here means the store was corrupted outside
+    * the protocol and wedging is the right call. Runs cascade within
+    * one call (a level-0 merge can trigger a level-1 merge
+    * immediately); returns the target ids of every compaction
+    * performed.
+    */
   def maybeCompactLeveled(spark: SparkSession, storeDir: String,
       tables: Seq[(String, Seq[String])], every: Int,
       fanout: Int = 4): Seq[Long] = {
-    require(every >= 2, s"compactEvery must be >= 2, got $every")
+    requireCompactEvery(every)
     require(fanout >= 2, s"fanout must be >= 2, got $fanout")
     withStoreLock(storeDir, "maybeCompactLeveled", blocking = false) {
       val sentinel = tables.head._1

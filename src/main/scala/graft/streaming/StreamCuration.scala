@@ -83,7 +83,6 @@ object StreamCuration {
       outDir: String, owner: String, minQuality: Double = 0.25,
       sigSpec: graft.queries.Dedup.SigSpec = graft.queries.Dedup.SigNarrow,
       compactEvery: Option[Int] = None,
-      compactLeveled: Boolean = false,
       probeDepth: Int = 0,
       foldWrites: Boolean = false,
       mediaProbeDepth: Int = 0,
@@ -97,6 +96,7 @@ object StreamCuration {
     graft.queries.Dedup.d20ProbeMasks(sigSpec.bandBits, probeDepth)
     graft.queries.Dedup.d20ProbeMasks(
       graft.queries.Multimodal.PhashBandChars, mediaProbeDepth)
+    compactEvery.foreach(GateStore.requireCompactEvery)
     // construction-time geometry pins, next to the owner claims: a
     // mis-specced restart fails before the stream starts, not at its
     // first micro-batch (round-14 advice)
@@ -116,24 +116,16 @@ object StreamCuration {
         batchMedia = Some(media), mediaStoreDir = Some(mediaStoreDir),
         sigSpec = sigSpec, probeDepth = probeDepth, foldWrites = foldWrites,
         mediaProbeDepth = mediaProbeDepth, mhSpec = mhSpec)
-      // inline maintenance, per store (each keyed off its OWN committed
-      // dir count — see GateStore.maybeCompact). Safe relative to the
-      // cross-store replay sentinel: compaction's marker-before-delete
-      // keeps every merged TEXT id vouched, and the embed/media stores
-      // are only ever read for ids below a batch that text's sentinel
-      // already gates. `compactLeveled` swaps in the bounded-
-      // amplification leveled policy (GateStore.maybeCompactLeveled) —
-      // the long-stream choice.
+      // inline leveled maintenance, per store (each keyed off its OWN
+      // committed dirs — see GateStore.maybeCompactLeveled). Safe
+      // relative to the cross-store replay sentinel: compaction's
+      // marker-before-delete keeps every merged TEXT id vouched, and the
+      // embed/media stores are only ever read for ids below a batch that
+      // text's sentinel already gates.
       compactEvery.foreach { k =>
-        if (compactLeveled) {
-          StreamNearDedup.maybeCompactLeveled(spark, textStoreDir, k)
-          StreamEmbedDedup.maybeCompactLeveled(spark, embedStoreDir, k)
-          StreamMediaDedup.maybeCompactLeveled(spark, mediaStoreDir, k)
-        } else {
-          StreamNearDedup.maybeCompact(spark, textStoreDir, k)
-          StreamEmbedDedup.maybeCompact(spark, embedStoreDir, k)
-          StreamMediaDedup.maybeCompact(spark, mediaStoreDir, k)
-        }
+        StreamNearDedup.maybeCompactLeveled(spark, textStoreDir, k)
+        StreamEmbedDedup.maybeCompactLeveled(spark, embedStoreDir, k)
+        StreamMediaDedup.maybeCompactLeveled(spark, mediaStoreDir, k)
       }
     }
   }

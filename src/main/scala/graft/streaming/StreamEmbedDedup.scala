@@ -55,14 +55,14 @@ object StreamEmbedDedup {
     * restarts, so an unguarded call no longer exists
     * ([[StreamNearDedup.sink]]'s doctrine). `probeDepth` turns on
     * multi-probe for wide geometries ([[Dedup.d20ProbeDirs]]);
-    * `compactLeveled` picks the bounded-amplification policy
-    * ([[GateStore.maybeCompactLeveled]]).
+    * `compactEvery` opts into inline leveled compact-every-K
+    * maintenance ([[GateStore.maybeCompactLeveled]], fanout 4), checked
+    * at construction like the depth.
     */
   def sink(spark: SparkSession, storeDir: String, outDir: String,
       spec: Dedup.SigSpec = Dedup.SigNarrow,
       owner: Option[String] = None,
       compactEvery: Option[Int] = None,
-      compactLeveled: Boolean = false,
       probeDepth: Int = 0): (DataFrame, Long) => Unit = {
     GateStore.claimOwner(storeDir, owner.getOrElse(GateStore.ownerFor(outDir)),
       if (owner.isEmpty) GateStore.legacyOwnerFor(outDir).toSeq else Nil)
@@ -70,9 +70,10 @@ object StreamEmbedDedup {
     // fail-fast like the geometry/owner guards: an out-of-range depth
     // must refuse at construction, not at the first non-empty store
     Dedup.d20ProbeMasks(spec.bandBits, probeDepth)
+    compactEvery.foreach(GateStore.requireCompactEvery)
     (batch, batchId) =>
       processBatch(spark, batch, batchId, storeDir, outDir, spec,
-        compactEvery, compactLeveled, probeDepth)
+        compactEvery, probeDepth)
   }
 
   /** One gate step; package-visible so the spec can drive batches
@@ -82,7 +83,6 @@ object StreamEmbedDedup {
       batchId: Long, storeDir: String, outDir: String,
       spec: Dedup.SigSpec = Dedup.SigNarrow,
       compactEvery: Option[Int] = None,
-      compactLeveled: Boolean = false,
       probeDepth: Int = 0): Unit = {
     // loud geometry pin: probing a store at another SigSpec would wave
     // near-dups through silently (GateStore.ensureGeometry's contract)
@@ -98,10 +98,7 @@ object StreamEmbedDedup {
       append = () => Dedup.sigStoreRows(vecs, spec)
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$storeDir/sigs/batch=$batchId"))
-    compactEvery.foreach { k =>
-      if (compactLeveled) GateStore.maybeCompactLeveled(spark, storeDir, Tables, k)
-      else GateStore.maybeCompact(spark, storeDir, Tables, k)
-    }
+    compactEvery.foreach(GateStore.maybeCompactLeveled(spark, storeDir, Tables, _))
   }
 
   /** Compact store partitions with batch id < `upTo` into `batch=<upTo>`
@@ -111,15 +108,9 @@ object StreamEmbedDedup {
   def compact(spark: SparkSession, storeDir: String, upTo: Long): Unit =
     GateStore.compact(spark, storeDir, upTo, Tables)
 
-  /** Inline compact-every-K policy over this gate's store layout —
-    * see [[GateStore.maybeCompact]] for the rule and cost model.
-    */
-  def maybeCompact(spark: SparkSession, storeDir: String,
-      every: Int): Option[Long] =
-    GateStore.maybeCompact(spark, storeDir, Tables, every)
-
-  /** Leveled compact-every-K over this gate's store layout — bounded
-    * per-compaction cost; see [[GateStore.maybeCompactLeveled]].
+  /** Leveled compact-every-K over this gate's store layout — what
+    * `compactEvery` runs inline; bounded per-compaction cost, see
+    * [[GateStore.maybeCompactLeveled]] for the rule and cost model.
     */
   def maybeCompactLeveled(spark: SparkSession, storeDir: String,
       every: Int, fanout: Int = 4): Seq[Long] =

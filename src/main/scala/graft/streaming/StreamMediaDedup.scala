@@ -52,9 +52,9 @@ object StreamMediaDedup {
     * [[GateStore.claimOwner]]'s contract — and defaults to
     * `out:<outDir>` (stable across restarts), so an unguarded call no
     * longer exists. The geometry pin runs at construction too.
-    * `compactEvery` opts into inline compact-every-K maintenance;
-    * `compactLeveled` picks the bounded-amplification leveled policy
-    * ([[GateStore.maybeCompactLeveled]]). `probeDepth` turns on the
+    * `compactEvery` opts into inline leveled compact-every-K
+    * maintenance ([[GateStore.maybeCompactLeveled]], fanout 4), checked
+    * at construction like the dials. `probeDepth` turns on the
     * gate's multi-probe recall dial ([[Multimodal.mm9Probe]]'s
     * pigeonhole arithmetic: depth 1 certifies candidates through the
     * full hamming-6 verify radius; depth 0 is the byte-identical
@@ -64,7 +64,6 @@ object StreamMediaDedup {
   def sink(spark: SparkSession, storeDir: String, outDir: String,
       owner: Option[String] = None,
       compactEvery: Option[Int] = None,
-      compactLeveled: Boolean = false,
       probeDepth: Int = 0): (DataFrame, Long) => Unit = {
     GateStore.claimOwner(storeDir, owner.getOrElse(GateStore.ownerFor(outDir)),
       if (owner.isEmpty) GateStore.legacyOwnerFor(outDir).toSeq else Nil)
@@ -72,9 +71,10 @@ object StreamMediaDedup {
     // fail-fast dial validation at construction (the embed sink's rule)
     graft.queries.Dedup.d20ProbeMasks(
       graft.queries.Multimodal.PhashBandChars, probeDepth)
+    compactEvery.foreach(GateStore.requireCompactEvery)
     (batch, batchId) =>
       processBatch(spark, batch, batchId, storeDir, outDir, compactEvery,
-        compactLeveled, probeDepth)
+        probeDepth)
   }
 
   /** One gate step; package-visible so the spec can drive batches
@@ -83,7 +83,6 @@ object StreamMediaDedup {
   private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, storeDir: String, outDir: String,
       compactEvery: Option[Int] = None,
-      compactLeveled: Boolean = false,
       probeDepth: Int = 0): Unit = {
     GateStore.ensureGeometry(storeDir, Geometry)
     val media = batch.select(col("media_id"), col("payload"), col("format"))
@@ -95,10 +94,7 @@ object StreamMediaDedup {
       // row set's and the replay sentinel's commit point
       append = () => Multimodal.mm9IndexRows(media).write.mode("overwrite")
         .parquet(s"$storeDir/bands/batch=$batchId"))
-    compactEvery.foreach { k =>
-      if (compactLeveled) GateStore.maybeCompactLeveled(spark, storeDir, Tables, k)
-      else GateStore.maybeCompact(spark, storeDir, Tables, k)
-    }
+    compactEvery.foreach(GateStore.maybeCompactLeveled(spark, storeDir, Tables, _))
   }
 
   /** Compact store partitions with batch id < `upTo` into `batch=<upTo>`
@@ -108,15 +104,9 @@ object StreamMediaDedup {
   def compact(spark: SparkSession, storeDir: String, upTo: Long): Unit =
     GateStore.compact(spark, storeDir, upTo, Tables)
 
-  /** Inline compact-every-K policy over this gate's store layout —
-    * see [[GateStore.maybeCompact]] for the rule and cost model.
-    */
-  def maybeCompact(spark: SparkSession, storeDir: String,
-      every: Int): Option[Long] =
-    GateStore.maybeCompact(spark, storeDir, Tables, every)
-
-  /** Leveled compact-every-K over this gate's store layout — bounded
-    * per-compaction cost; see [[GateStore.maybeCompactLeveled]].
+  /** Leveled compact-every-K over this gate's store layout — what
+    * `compactEvery` runs inline; bounded per-compaction cost, see
+    * [[GateStore.maybeCompactLeveled]] for the rule and cost model.
     */
   def maybeCompactLeveled(spark: SparkSession, storeDir: String,
       every: Int, fanout: Int = 4): Seq[Long] =

@@ -73,10 +73,9 @@ object StreamNearDedup {
     * stable across restarts as the query's checkpoint, so an unguarded
     * call no longer exists (round-14 advice). The geometry pin runs
     * here too, so a mis-specced restart fails at construction, before
-    * the stream starts. `compactEvery` opts into inline compact-every-K
-    * maintenance; `compactLeveled` picks the bounded-amplification
-    * leveled policy ([[GateStore.maybeCompactLeveled]]) over the
-    * fixture-scale full rewrite ([[GateStore.maybeCompact]]).
+    * the stream starts. `compactEvery` opts into inline leveled
+    * compact-every-K maintenance ([[GateStore.maybeCompactLeveled]],
+    * fanout 4), checked here too.
     * `mhSpec` picks the MinHash banding geometry
     * ([[graft.queries.Dedup.MinHashSpec]]: default 32×4 oracle shape,
     * [[graft.queries.Dedup.MinHashSharp]] 16×8 for production
@@ -86,15 +85,15 @@ object StreamNearDedup {
   def sink(spark: SparkSession, storeDir: String, outDir: String,
       owner: Option[String] = None,
       compactEvery: Option[Int] = None,
-      compactLeveled: Boolean = false,
       mhSpec: Dedup.MinHashSpec = Dedup.MinHashDefault)
       : (DataFrame, Long) => Unit = {
     GateStore.claimOwner(storeDir, owner.getOrElse(GateStore.ownerFor(outDir)),
       if (owner.isEmpty) GateStore.legacyOwnerFor(outDir).toSeq else Nil)
     GateStore.ensureGeometry(storeDir, mhSpec.geometryId)
+    compactEvery.foreach(GateStore.requireCompactEvery)
     (batch, batchId) =>
       processBatch(spark, batch, batchId, storeDir, outDir, compactEvery,
-        compactLeveled, mhSpec)
+        mhSpec)
   }
 
   /** One gate step; package-visible so the spec can drive batches
@@ -103,7 +102,6 @@ object StreamNearDedup {
   private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, storeDir: String, outDir: String,
       compactEvery: Option[Int] = None,
-      compactLeveled: Boolean = false,
       mhSpec: Dedup.MinHashSpec = Dedup.MinHashDefault): Unit = {
     GateStore.ensureGeometry(storeDir, mhSpec.geometryId)
     val docs = batch.select(col("doc_id"), col("text"))
@@ -124,10 +122,7 @@ object StreamNearDedup {
         Dedup.minhashBandsSpec(sh, mhSpec).write.mode("overwrite")
           .parquet(s"$storeDir/bands/batch=$batchId")
       })
-    compactEvery.foreach { k =>
-      if (compactLeveled) GateStore.maybeCompactLeveled(spark, storeDir, Tables, k)
-      else GateStore.maybeCompact(spark, storeDir, Tables, k)
-    }
+    compactEvery.foreach(GateStore.maybeCompactLeveled(spark, storeDir, Tables, _))
   }
 
   /** Compact every store partition with batch id < `upTo` into the
@@ -138,15 +133,9 @@ object StreamNearDedup {
   def compact(spark: SparkSession, storeDir: String, upTo: Long): Unit =
     GateStore.compact(spark, storeDir, upTo, Tables)
 
-  /** Inline compact-every-K policy over this gate's store layout —
-    * see [[GateStore.maybeCompact]] for the rule and cost model.
-    */
-  def maybeCompact(spark: SparkSession, storeDir: String,
-      every: Int): Option[Long] =
-    GateStore.maybeCompact(spark, storeDir, Tables, every)
-
-  /** Leveled compact-every-K over this gate's store layout — bounded
-    * per-compaction cost; see [[GateStore.maybeCompactLeveled]].
+  /** Leveled compact-every-K over this gate's store layout — what
+    * `compactEvery` runs inline; bounded per-compaction cost, see
+    * [[GateStore.maybeCompactLeveled]] for the rule and cost model.
     */
   def maybeCompactLeveled(spark: SparkSession, storeDir: String,
       every: Int, fanout: Int = 4): Seq[Long] =

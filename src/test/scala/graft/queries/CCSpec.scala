@@ -151,8 +151,11 @@ class CCSpec extends AnyFunSuite {
   test("non-convergence within maxRounds fails loudly, not silently") {
     import spark.implicits._
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalStateException] {
       Dedup.connectedComponentsLoop(chain, maxRounds = 1)
     }
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before == Set.empty,
+      "a non-converged loop left its checkpoints pinned")
   }
 }

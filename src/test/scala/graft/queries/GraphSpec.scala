@@ -14,7 +14,7 @@ class GraphSpec extends AnyFunSuite {
 
   private def run(nodes: Seq[Long], edges: Seq[(Long, Long)])
       : Map[Long, Double] =
-    Graph.pageRankFrame(nodes.toDF("id"), edges.toDF("src", "dst"))
+    Graph.pageRankConverged(nodes.toDF("id"), edges.toDF("src", "dst"))._1
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
   private def runCounting(nodes: Seq[Long], edges: Seq[(Long, Long)],

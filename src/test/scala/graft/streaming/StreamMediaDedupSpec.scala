@@ -144,8 +144,8 @@ class StreamMediaDedupSpec extends AnyFunSuite {
   test("compactEvery policy: verdicts identical to the uncompacted gate, store stays small, compacted replays stay no-ops") {
     val root = java.nio.file.Files.createTempDirectory("mediadedup-p-").toString
     val bs = batches()
-    // control: no policy. policy store: compact whenever >= 2 committed
-    // dirs — i.e. after every batch past the first
+    // control: no policy. policy store: leveled, every = 2 — batches
+    // 0 and 1 fold into a level-0 run at 1, batch 2 stays fresh
     val (cs, co) = (s"$root/cstore", s"$root/cout")
     val (ps, po) = (s"$root/pstore", s"$root/pout")
     bs.zipWithIndex.foreach { case (b, i) =>
@@ -161,15 +161,16 @@ class StreamMediaDedupSpec extends AnyFunSuite {
     def dirs(store: String) =
       GateStore.listBatchDirs(new java.io.File(s"$store/bands")).map(_._1)
     assert(dirs(cs) == Seq(0L, 1L, 2L))
-    assert(dirs(ps) == Seq(2L),
+    assert(dirs(ps) == Seq(1L, 2L),
       s"policy store not compacted: ${dirs(ps)}")
-    assert(GateStore.compactedUpTo(ps) == 2L)
+    assert(GateStore.compactedUpTo(ps) == 1L)
+    assert(GateStore.readLevels(ps).toSet == Set((0, 1L)))
     // replays of the merged-away ids are still no-ops (marker vouches)
     StreamMediaDedup.processBatch(spark, bs(0), 0L, ps, po,
       compactEvery = Some(2))
     StreamMediaDedup.processBatch(spark, bs(1), 1L, ps, po,
       compactEvery = Some(2))
-    assert(dirs(ps) == Seq(2L), "compacted-id replay re-seeded the store")
+    assert(dirs(ps) == Seq(1L, 2L), "compacted-id replay re-seeded the store")
     // below-threshold store: the policy is a no-op, nothing compacts
     val (ss, so) = (s"$root/sstore", s"$root/sout")
     StreamMediaDedup.processBatch(spark, bs(0), 0L, ss, so,

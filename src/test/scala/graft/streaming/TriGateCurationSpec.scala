@@ -251,7 +251,8 @@ class TriGateCurationSpec extends AnyFunSuite {
           spark.read.parquet(s"$oC/chunks/batch=$i")
             .select("doc_id").collect().map(_.getLong(0)).toSet)
       }
-      // every store collapsed to its newest batch dir, markers vouch
+      // every store folded its two batches into one run at its newest
+      // batch dir, markers vouch
       def dirs(store: String, table: String) =
         GateStore.listBatchDirs(new java.io.File(s"$store/$table")).map(_._1)
       assert(dirs(tP, "bands") == Seq(1L) && dirs(tP, "shingles") == Seq(1L))
@@ -287,8 +288,8 @@ class TriGateCurationSpec extends AnyFunSuite {
   }
 
   test("tri-gate LEVELED compaction: verdicts unchanged, all three stores fold to level runs, merged replay no-op, post-merge probe intact") {
-    // the leveled twin of the compactEvery test above — the production
-    // policy (GateStore.maybeCompactLeveled) composing across all three
+    // the leveled ledger behind the compactEvery test above —
+    // GateStore.maybeCompactLeveled composing across all three
     // modality stores inside one logical batch
     val root = java.nio.file.Files.createTempDirectory("trigate-l-").toString
     val bs = alignedBatches()
@@ -298,7 +299,7 @@ class TriGateCurationSpec extends AnyFunSuite {
       val control = StreamCuration.triGateSink(spark, tC, eC, mC, dir, oC,
         owner = "trigate-ctl-l")
       val leveled = StreamCuration.triGateSink(spark, tL, eL, mL, dir, oL,
-        owner = "trigate-lev", compactEvery = Some(2), compactLeveled = true)
+        owner = "trigate-lev", compactEvery = Some(2))
       bs.zipWithIndex.foreach { case (b, i) =>
         control(b, i.toLong); leveled(b, i.toLong)
       }
@@ -338,6 +339,37 @@ class TriGateCurationSpec extends AnyFunSuite {
       assert(verdictSet(oL, 2).exists { case (m, n, d, s) =>
         m == "text" && n == 9700002L && d == 9500001L && s == 1.0 },
         "leveled store lost batch 0's rows")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
+  test("compactEvery < 2 refuses at sink construction, before any batch dir is written") {
+    // checked after the first batch's sentinel commit, the bound would
+    // throw on every replay of an already-committed batch and wedge the
+    // stream — so every sink must refuse it up front
+    val root = java.nio.file.Files.createTempDirectory("trigate-ce-").toString
+    try {
+      val sinks: Seq[(String, () => Any)] = Seq(
+        "text" -> (() => StreamNearDedup.sink(spark, s"$root/nt", s"$root/no",
+          compactEvery = Some(1))),
+        "embed" -> (() => StreamEmbedDedup.sink(spark, s"$root/et", s"$root/eo",
+          compactEvery = Some(1))),
+        "media" -> (() => StreamMediaDedup.sink(spark, s"$root/mt", s"$root/mo",
+          compactEvery = Some(1))),
+        "tri-gate" -> (() => StreamCuration.triGateSink(spark, s"$root/tt",
+          s"$root/te", s"$root/tm", dir, s"$root/to", owner = "trigate-ce",
+          compactEvery = Some(1))))
+      sinks.foreach { case (name, build) =>
+        val e = intercept[IllegalArgumentException](build())
+        assert(e.getMessage.contains("compactEvery"), s"$name: ${e.getMessage}")
+      }
+      import scala.jdk.CollectionConverters._
+      val batchDirs = scala.util.Using.resource(
+          java.nio.file.Files.walk(java.nio.file.Paths.get(root)))(
+        _.iterator().asScala.filter(_.getFileName.toString.startsWith("batch="))
+          .toList)
+      assert(batchDirs.isEmpty, s"refused sinks wrote batch dirs: $batchDirs")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
