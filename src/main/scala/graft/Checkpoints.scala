@@ -66,13 +66,19 @@ object Checkpoints {
 
   /** [[eager]] with named aggregates that RIDE the checkpoint job via
     * `Dataset.observe`: the handle plus the metrics row, at no extra
-    * job. EXACT INTEGER metrics only — accumulators merge in
-    * task-completion order, which would jitter a floating-point sum.
+    * job. EXACT metrics only — accumulators merge in task-completion
+    * order, so a metric may ride only when that order cannot change it:
+    * integer counts and sums, and min/max selections (an order-only
+    * pick, e.g. `max(struct(score, -id, payload))` for an argmax with a
+    * smallest-id tie-break). A double sum never rides — its merge order
+    * would jitter the ULPs; scan it off the pinned blocks instead.
     */
   def eagerObserved(df: DataFrame, metric: Column, more: Column*): (Checkpointed, Row) = {
     val obs = Observation()
     val cp = eager(df.observe(obs, metric, more: _*))
-    (cp, awaitMetrics(cp, obs, metric +: more, ObserveWait))
+    // an interrupted wait must not strand the pin it was waiting on
+    try (cp, awaitMetrics(cp, obs, metric +: more, ObserveWait))
+    catch { case t: Throwable => cp.release(); throw t }
   }
 
   /** The observed row, or — once `wait` lapses — the same aggregate

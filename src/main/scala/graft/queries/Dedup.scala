@@ -830,36 +830,22 @@ object Dedup {
     *
     * Scale shape: a round shuffles only (node, node) id pairs (groupBy
     * min + one co-partitioned join per step); every round's edge set is
-    * localCheckpoint'ed to truncate lineage and the PREVIOUS round's
-    * blocks are unpersisted as soon as the new one materializes, so
-    * executor storage stays O(1) in rounds (CCSpec asserts this). The
-    * driver sees only per-round counts. Throws rather than returning
-    * silently-unconverged labels if `maxRounds` is exhausted.
+    * a [[graft.Fixpoint]] state, localCheckpoint'ed to truncate lineage,
+    * and the PREVIOUS round's blocks are unpersisted as soon as the new
+    * one materializes, so executor storage stays O(1) in rounds (CCSpec
+    * asserts this). The driver sees only per-round counts. Throws rather
+    * than returning silently-unconverged labels if `maxRounds` is
+    * exhausted, and no pin outlives the throw (or any other).
     */
   private def starLoop(raw0: graft.Checkpoints.Checkpointed, maxRounds: Int)
-      : (graft.Checkpoints.Checkpointed, Int) = {
-    import graft.Checkpoints.{eager, eagerObserved}
-    val raw = raw0.df
+      : (graft.Checkpoints.Checkpointed, Int) = graft.Fixpoint.run { fx =>
+    import graft.Checkpoints.eager
+    // the raw edges feed only the node set and the first edge state
+    val raw = fx.input(raw0)
     // EVERY mentioned node gets a label — including nodes whose only
     // edges are self-loops, which the edge canonicalization drops
-    val nodes = eager(raw.select(col("a").as("id"))
-      .union(raw.select(col("b").as("id"))).distinct())
-    // edge-set signature for the fixed-point check: exact integers
-    // (count + order-independent xor of xxhash64), so the observation's
-    // task-completion-order merge cannot change the value
-    def sigged(df: DataFrame): (graft.Checkpoints.Checkpointed, (Long, Long)) = {
-      val (cp, m) = eagerObserved(df, count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x"))
-      (cp, (m.getLong(0), m.getLong(1)))
-    }
-    // undirected edges oriented high→low (smallStar's output orientation,
-    // so an already-converged star forest is detected in one round),
-    // self-loops dropped; the initial signature rides this checkpoint
-    val (init, sig0) = sigged(raw
-      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct())
-    raw0.release()
+    val nodes = fx.static(eager(raw.select(col("a").as("id"))
+      .union(raw.select(col("b").as("id"))).distinct()))
 
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -896,40 +882,36 @@ object Dedup {
     // former shape re-scanned the just-pinned blocks as a second job
     // every round, i.e. one extra pass over the corpus-sized edge state
     // per round at cluster scale (guide §1.2, remove passes; CheckpointsSpec
-    // pins that observed metrics fire under localCheckpoint(eager)).
+    // pins that observed metrics fire under an eager localCheckpoint).
     // Safe ONLY because both metrics are exact integers, so the
     // task-completion-order accumulator merge cannot change them — the
     // g1/g2 loops' double-valued delta scans deliberately stay separate
     // aggregates for exactly that reason (merge order would jitter ULPs).
     // The EXACT set check (`except`) still runs only when signatures
-    // agree, i.e. once at true convergence.
-    var edges = init
-    var sig = sig0
-    var stable = false
-    var rounds = 0
-    while (!stable && rounds < maxRounds) {
-      val (next, nextSig) = sigged(smallStar(largeStar(edges.df)))
-      // `next` is materialized, so the superseded round's blocks
-      // release immediately — storage stays O(1) in rounds (CCSpec
-      // asserts this).
-      stable = nextSig == sig && next.df.except(edges.df).isEmpty
-      edges.release()
-      edges = next
-      sig = nextSig
-      rounds += 1
-    }
-    if (!stable) {
-      edges.release(); nodes.release()
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds")
-    }
+    // agree, i.e. once at true convergence, while the superseded round
+    // is still pinned. Signal: (signature, stable).
+    def sigged(df: DataFrame, prev: Option[(DataFrame, (Long, Long))]) =
+      graft.Fixpoint.Plan(df, count(lit(1)).as("n"),
+          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("x")) { (next, m) =>
+        val sig = (m.getLong(0), m.getLong(1))
+        (sig, prev.exists { case (p, pSig) => pSig == sig && next.except(p).isEmpty })
+      }
+    // undirected edges oriented high→low (smallStar's output orientation,
+    // so an already-converged star forest is detected in one round),
+    // self-loops dropped; the initial signature rides this checkpoint
+    val res = fx.iterate(maxRounds, sigged(raw
+        .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct(), None)) { case (edges, (sig, _)) =>
+      sigged(smallStar(largeStar(edges)), Some((edges, sig)))
+    } (_._2)
+    if (!res.stopped) throw new IllegalStateException(
+      s"connectedComponents did not converge in $maxRounds rounds")
     // converged stars are oriented member→center(=component min);
     // centers label themselves
-    val result = eager(nodes.df.join(
-        edges.df.select(col("u").as("id"), col("v").as("lbl")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("label")))
-    edges.release(); nodes.release()
-    (result, rounds)
+    (fx.keep(eager(nodes.join(
+        res.state.df.select(col("u").as("id"), col("v").as("lbl")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("lbl"), col("id")).as("label")))), res.rounds)
   }
 
   /** D7: duplicate clusters — connected components over the d2 near-dup

@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.{Checkpoints, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Checkpoints, Fixpoint, Tables}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
 
@@ -13,7 +13,11 @@ import scala.collection.immutable.ListMap
   * Iterative-graph discipline is the same as d7's connected
   * components: one keyed shuffle per round, rank state re-materialized
   * through tracked local checkpoints (flat lineage, superseded blocks
-  * released), never a driver-side adjacency structure.
+  * released), never a driver-side adjacency structure. The converging
+  * loops (g1, g2) run on [[graft.Fixpoint]], which owns their static
+  * and per-round pins and releases them on every exit, a throw
+  * included; the fixed-round twins (g1b, g2b, g3) unroll one plan and
+  * checkpoint it once.
   */
 object Graph {
 
@@ -41,20 +45,24 @@ object Graph {
   def g1PageRank(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
     val n = docs.count()
-    val edges = docs.select(col("id").as("src"),
-      explode(array(
-        (col("id") * 7 + 1) % n,
-        (col("id") * 13 + 3) % n,
-        (col("id") * 29 + 7) % n)).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
     // n already counted for the edge formula — pass it through so the
     // loop doesn't schedule a second count job over the same scan
-    pageRankConverged(docs, edges, PrMaxIters, PrNodeTol, Some(n))._1
+    pageRankConverged(docs, g1Edges(docs, n), PrMaxIters, PrNodeTol, Some(n))._1
       .select(col("id").as("doc_id"), round(col("rank"), 8).as("rank"))
       .orderBy(col("rank").desc, col("doc_id"))
       .limit(100)
   }
+
+  /** g1's link graph: three affine-hash out-links per doc, plus `more`
+    * dst formulas (g1b adds its ring edge); self-loops dropped.
+    */
+  private[queries] def g1Edges(docs: DataFrame, n: Long, more: Column*): DataFrame =
+    docs.select(col("id").as("src"), explode(array(Seq(
+        (col("id") * 7 + 1) % n,
+        (col("id") * 13 + 3) % n,
+        (col("id") * 29 + 7) % n) ++ more: _*)).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
 
   /** Power iteration over (nodes(id), edges(src, dst)) to convergence.
     *
@@ -63,10 +71,11 @@ object Graph {
     * correct) + one map-side-combined sum keyed by dst; the dangling
     * mass (rank parked on nodes with no outlinks) is a scalar
     * aggregation redistributed uniformly, keeping Σrank = 1 exactly.
-    * Rank state is corpus-sized and re-materializes each round via
-    * Checkpoints.eager with the superseded round released — executor
-    * storage holds ONE copy of the rank vector at any time, and the
-    * lineage never nests (the d7 loop discipline).
+    * Rank state is corpus-sized and re-materializes each round as a
+    * [[graft.Fixpoint]] state (a tracked checkpoint, the superseded round
+    * released) — executor storage holds ONE copy of the rank vector at
+    * any time, the lineage never nests (the d7 loop discipline), and no
+    * pin outlives a round that throws.
     *
     * Termination: the previous rank rides the round's frame (replacing
     * the nodes join — ranks carries exactly the node ids), so the
@@ -101,51 +110,59 @@ object Graph {
       nodeTol: Double = PrNodeTol, nKnown: Option[Long] = None): (DataFrame, Int) = {
     val n = nKnown.getOrElse(nodes.count())
     val tol = nodeTol * n
-    // the edge list and degree table are STATIC across rounds — pin the
-    // degree-attached edge list once (r7: each round's checkpoint job
-    // was otherwise re-running the edge derivation incl. its distinct()
-    // shuffle and the degree groupBy; r17: the degree JOIN itself also
-    // left the loop)
-    val eRaw = Checkpoints.eager(edges)
-    val eEdges = Checkpoints.eager(eRaw.df.join(
-      eRaw.df.groupBy(col("src")).agg(count(lit(1)).as("deg")), Seq("src")))
-    var ranks = Checkpoints.eager(
-      nodes.select(col("id"))
-        .join(eEdges.df.select(col("src").as("id")).distinct()
-          .withColumn("has_out", lit(true)), Seq("id"), "left")
-        .select(col("id"), lit(1.0 / n).as("rank"),
-          col("has_out").isNull.as("dangling")))
-    eRaw.release()
-    // initial dangling mass off the just-pinned blocks (same shape as
-    // the per-round delta scan)
-    var m = ranks.df.filter(col("dangling"))
-      .agg(coalesce(sum(col("rank")), lit(0.0))).first().getDouble(0)
-    var it = 0
-    var delta = Double.MaxValue
-    while (it < maxIters && delta >= tol) {
-      val contribs = eEdges.df
-        .join(ranks.df.select(col("id").as("src"), col("rank")), Seq("src"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("in_sum"))
-      val next = Checkpoints.eager(
-        ranks.df.select(col("id"), col("rank").as("prev"), col("dangling"))
-          .join(contribs, Seq("id"), "left")
-          .withColumn("rank",
-            lit((1 - Damping) / n) + lit(Damping) *
-              (coalesce(col("in_sum"), lit(0.0)) + lit(m / n)))
-          .select(col("id"), col("rank"), col("dangling"),
-            abs(col("rank") - col("prev")).as("delta")))
-      // delta + next round's dangling mass in ONE cached-block scan
-      val r = next.df.agg(sum(col("delta")),
-        coalesce(sum(when(col("dangling"), col("rank"))), lit(0.0))).first()
-      delta = r.getDouble(0)
-      m = r.getDouble(1)
-      ranks.release()
-      ranks = next
-      it += 1
+    Fixpoint.run { fx =>
+      // the edge list and degree table are STATIC across rounds — pin the
+      // degree-attached edge list once (r7: each round's checkpoint job
+      // was otherwise re-running the edge derivation incl. its distinct()
+      // shuffle and the degree groupBy; r17: the degree JOIN itself also
+      // left the loop)
+      val e = fx.static(pinDegrees(edges, "deg"))
+      // signal: (L1 delta, dangling mass for the next round) — double
+      // sums, so a 1-row scan of the just-pinned blocks, never observed
+      val init = Fixpoint.Plan(nodes.select(col("id"))
+          .join(e.select(col("src").as("id")).distinct()
+            .withColumn("has_out", lit(true)), Seq("id"), "left")
+          .select(col("id"), lit(1.0 / n).as("rank"),
+            col("has_out").isNull.as("dangling"))) { (ranks, _) =>
+        (Double.MaxValue, ranks.filter(col("dangling"))
+          .agg(coalesce(sum(col("rank")), lit(0.0))).first().getDouble(0))
+      }
+      val res = fx.iterate(maxIters, init) { case (ranks, (_, m)) =>
+        val contribs = e
+          .join(ranks.select(col("id").as("src"), col("rank")), Seq("src"))
+          .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
+          .groupBy(col("id")).agg(sum(col("c")).as("in_sum"))
+        Fixpoint.Plan(
+          ranks.select(col("id"), col("rank").as("prev"), col("dangling"))
+            .join(contribs, Seq("id"), "left")
+            .withColumn("rank",
+              lit((1 - Damping) / n) + lit(Damping) *
+                (coalesce(col("in_sum"), lit(0.0)) + lit(m / n)))
+            .select(col("id"), col("rank"), col("dangling"),
+              abs(col("rank") - col("prev")).as("delta"))) { (next, _) =>
+          // delta + next round's dangling mass in ONE cached-block scan
+          val r = next.agg(sum(col("delta")),
+            coalesce(sum(when(col("dangling"), col("rank"))), lit(0.0))).first()
+          (r.getDouble(0), r.getDouble(1))
+        }
+      } { case (delta, _) => delta < tol }
+      (fx.keep(res.state).df.select(col("id"), col("rank")), res.rounds)
     }
-    eEdges.release()
-    (ranks.df.select(col("id"), col("rank")), it)
+  }
+
+  /** Pins `edges` with its out-degree attached to every row as `out`
+    * and, given `in`, its in-degree as `in` — the static table every
+    * round of g1/g1b (out) and g2/g2b (both) reads. The raw edge pin
+    * feeds only the degree joins and is released on every exit path.
+    */
+  private def pinDegrees(edges: DataFrame, out: String,
+      in: Option[String] = None): Checkpoints.Checkpointed = {
+    val raw = Checkpoints.eager(edges)
+    def deg(end: String, as: String) =
+      raw.df.groupBy(col(end)).agg(count(lit(1)).as(as))
+    val withOut = raw.df.join(deg("src", out), Seq("src"))
+    try Checkpoints.eager(in.fold(withOut)(i => withOut.join(deg("dst", i), Seq("dst"))))
+    finally raw.release()
   }
 
   // g1b fixed-point parameters: ranks live on an integer grid of
@@ -183,22 +200,11 @@ object Graph {
   def g1bPageRankFixed(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id").as("id"))
     val n = docs.count()
-    val edges = docs.select(col("id").as("src"),
-      explode(array(
-        (col("id") * 7 + 1) % n,
-        (col("id") * 13 + 3) % n,
-        (col("id") * 29 + 7) % n,
-        (col("id") + 1) % n)).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val base = (15L * G1bScale / 100L) / n
     // degree attached to the pinned edge row once (r17, g1's rationale)
     // — 10 unrolled rounds each drop one keyed join from the plan, and
     // integer arithmetic makes the restructure bit-exact for the twin
-    val eRaw = Checkpoints.eager(edges)
-    val eEdges = Checkpoints.eager(eRaw.df.join(
-      eRaw.df.groupBy(col("src")).agg(count(lit(1)).as("deg")), Seq("src")))
-    eRaw.release()
-    val base = (15L * G1bScale / 100L) / n
+    val eEdges = pinDegrees(g1Edges(docs, n, (col("id") + 1) % n), "deg")
     var ranks = docs.select(col("id"), lit(G1bScale / n).as("r"))
     for (_ <- 1 to G1bRounds) {
       ranks = eEdges.df
@@ -208,9 +214,8 @@ object Graph {
         .select(col("id"), (lit(base) + expr("(85 * s) DIV 100")).as("r"))
     }
     // one materialization job (10 shuffle stages over the pinned edge
-    // blocks), then the static pin is safe to release
-    val fin = Checkpoints.eager(ranks)
-    eEdges.release()
+    // blocks); the static pin is released after it, or when it throws
+    val fin = try Checkpoints.eager(ranks) finally eEdges.release()
     fin.df.select(col("id").as("doc_id"), col("r").as("rank_e12"))
       .orderBy(col("rank_e12").desc, col("doc_id"))
       .limit(100)
@@ -329,9 +334,10 @@ object Graph {
     * subtree (referenced by the hub join, the mA aggregate, and the
     * final authority column) is deduplicated by ReuseExchange — the
     * shuffle runs once. The checkpoint holds (id, hub, auth, |Δa|);
-    * superseded blocks are released, so executor storage carries one
-    * copy of the state at any time. Returns the (id, authority, hub)
-    * frame and the number of rounds actually run.
+    * the state is a [[graft.Fixpoint]] state, so superseded blocks are
+    * released and executor storage carries one copy of it at any time,
+    * and no pin outlives a round that throws. Returns the (id,
+    * authority, hub) frame and the number of rounds actually run.
     *
     * Round-17 loop slimming, mirroring [[pageRankConverged]]'s:
     * out-/in-degrees are ATTACHED to the pinned edge row once (the two
@@ -343,7 +349,9 @@ object Graph {
     * (its in_sum is exactly 0), so its a₂ is the CONSTANT
     * ε/n + (1−ε)·mH/n; symmetrically a node with no out-links closes no
     * wedge (its hub_sum is exactly 0), so its new hub is the constant
-    * ε/n + (1−ε)·mA/n. With nNoIn/nNoOut counted once, the masses are
+    * ε/n + (1−ε)·mA/n. With nNoIn/nNoOut counted once (exact counts
+    * riding the initial state's checkpoint — no job of their own), the
+    * masses are
     * {{{
     *   mA_t = nNoIn  · (ε/n + (1−ε)·mH_{t−1}/n)
     *   mH_t = nNoOut · (ε/n + (1−ε)·mA_t/n)
@@ -360,69 +368,57 @@ object Graph {
     val n = nKnown.getOrElse(nodes.count())
     val tol = nodeTol * n
     val eps = HitsReset
-    // static across rounds — pin once (g1's r7 rationale: the synthetic
-    // edge derivation's distinct() shuffle and both degree groupBys were
-    // re-running inside every round's checkpoint job; r17: the degree
-    // joins themselves also left the loop)
-    val eRaw = Checkpoints.eager(edges)
-    val eEdges = Checkpoints.eager(eRaw.df
-      .join(eRaw.df.groupBy(col("src")).agg(count(lit(1)).as("odeg")), Seq("src"))
-      .join(eRaw.df.groupBy(col("dst")).agg(count(lit(1)).as("ideg")), Seq("dst")))
-    var state = Checkpoints.eager(
-      nodes.select(col("id"))
-        .join(eEdges.df.select(col("src").as("id")).distinct()
-          .withColumn("ho", lit(true)), Seq("id"), "left")
-        .join(eEdges.df.select(col("dst").as("id")).distinct()
-          .withColumn("hi", lit(true)), Seq("id"), "left")
-        .select(col("id"), lit(1.0 / n).as("hub"), lit(1.0 / n).as("auth"),
-          col("ho").isNull.as("no_out"), col("hi").isNull.as("no_in")))
-    eRaw.release()
-    // the two static class sizes, in one scan of the just-pinned blocks
-    val cnt = state.df.agg(
-      coalesce(sum(when(col("no_out"), 1L)), lit(0L)),
-      coalesce(sum(when(col("no_in"), 1L)), lit(0L))).first()
-    val nNoOut = cnt.getLong(0)
-    val nNoIn = cnt.getLong(1)
-    var mH = nNoOut * (1.0 / n) // initial hub = 1/n on every node
-    var it = 0
-    var delta = Double.MaxValue
-    while (it < maxIters && delta >= tol) {
-      val mA = nNoIn * (eps / n + (1 - eps) * mH / n)
-      // a' = εu + (1−ε)(row-normalized hub flow + dangling share);
-      // built over state.df so nodes with no in-links keep their row
-      val inSum = eEdges.df
-        .join(state.df.select(col("id").as("src"), col("hub")), Seq("src"))
-        .select(col("dst").as("id"), (col("hub") / col("odeg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("in_sum"))
-      val aNew = state.df.select(col("id"), col("auth").as("prev_a"),
-          col("no_out"), col("no_in"))
-        .join(inSum, Seq("id"), "left")
-        .withColumn("a2", lit(eps / n) + lit(1 - eps) *
-          (coalesce(col("in_sum"), lit(0.0)) + lit(mH / n)))
-        .select(col("id"), col("a2"), col("prev_a"),
-          col("no_out"), col("no_in"))
-      val hubSum = eEdges.df
-        .join(aNew.select(col("id").as("dst"), col("a2")), Seq("dst"))
-        .select(col("src").as("id"), (col("a2") / col("ideg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("hub_sum"))
-      val next = Checkpoints.eager(
-        aNew.join(hubSum, Seq("id"), "left")
-          .select(col("id"),
-            (lit(eps / n) + lit(1 - eps) *
-              (coalesce(col("hub_sum"), lit(0.0)) + lit(mA / n))).as("hub"),
-            col("a2").as("auth"), col("no_out"), col("no_in"),
-            abs(col("a2") - col("prev_a")).as("delta")))
-      delta = next.df.agg(sum(col("delta"))).first().getDouble(0)
-      mH = nNoOut * (eps / n + (1 - eps) * mA / n)
-      state.release()
-      state = next
-      it += 1
+    Fixpoint.run { fx =>
+      // static across rounds — pin once (g1's r7 rationale: the synthetic
+      // edge derivation's distinct() shuffle and both degree groupBys were
+      // re-running inside every round's checkpoint job; r17: the degree
+      // joins themselves also left the loop)
+      val e = fx.static(pinDegrees(edges, "odeg", Some("ideg")))
+      // the two static class sizes ride the initial checkpoint
+      val init = Fixpoint.Plan(nodes.select(col("id"))
+          .join(e.select(col("src").as("id")).distinct()
+            .withColumn("ho", lit(true)), Seq("id"), "left")
+          .join(e.select(col("dst").as("id")).distinct()
+            .withColumn("hi", lit(true)), Seq("id"), "left")
+          .select(col("id"), lit(1.0 / n).as("hub"), lit(1.0 / n).as("auth"),
+            col("ho").isNull.as("no_out"), col("hi").isNull.as("no_in")),
+          count_if(col("no_out")).as("n_no_out"),
+          count_if(col("no_in")).as("n_no_in")) { (_, m) =>
+        // signal: (nNoOut, nNoIn, mH, L1 delta); initial hub = 1/n everywhere
+        (m.getLong(0), m.getLong(1), m.getLong(0) * (1.0 / n), Double.MaxValue)
+      }
+      val res = fx.iterate(maxIters, init) { case (state, (nNoOut, nNoIn, mH, _)) =>
+        val mA = nNoIn * (eps / n + (1 - eps) * mH / n)
+        // a' = εu + (1−ε)(row-normalized hub flow + dangling share);
+        // built over the state so nodes with no in-links keep their row
+        val inSum = e
+          .join(state.select(col("id").as("src"), col("hub")), Seq("src"))
+          .select(col("dst").as("id"), (col("hub") / col("odeg")).as("c"))
+          .groupBy(col("id")).agg(sum(col("c")).as("in_sum"))
+        val aNew = state.select(col("id"), col("auth").as("prev_a"),
+            col("no_out"), col("no_in"))
+          .join(inSum, Seq("id"), "left")
+          .withColumn("a2", lit(eps / n) + lit(1 - eps) *
+            (coalesce(col("in_sum"), lit(0.0)) + lit(mH / n)))
+          .select(col("id"), col("a2"), col("prev_a"),
+            col("no_out"), col("no_in"))
+        val hubSum = e
+          .join(aNew.select(col("id").as("dst"), col("a2")), Seq("dst"))
+          .select(col("src").as("id"), (col("a2") / col("ideg")).as("c"))
+          .groupBy(col("id")).agg(sum(col("c")).as("hub_sum"))
+        Fixpoint.Plan(aNew.join(hubSum, Seq("id"), "left")
+            .select(col("id"),
+              (lit(eps / n) + lit(1 - eps) *
+                (coalesce(col("hub_sum"), lit(0.0)) + lit(mA / n))).as("hub"),
+              col("a2").as("auth"), col("no_out"), col("no_in"),
+              abs(col("a2") - col("prev_a")).as("delta"))) { (next, _) =>
+          (nNoOut, nNoIn, nNoOut * (eps / n + (1 - eps) * mA / n),
+            next.agg(sum(col("delta"))).first().getDouble(0))
+        }
+      } (_._4 < tol)
+      (fx.keep(res.state).df.select(col("id"), col("auth").as("authority"), col("hub")),
+        res.rounds)
     }
-    // release the static pin like pageRankConverged does — a long-lived
-    // caller would otherwise leak corpus-scale checkpoint sets per
-    // invocation (the exact class behind round 3's 13-40x bench inflation)
-    eEdges.release()
-    (state.df.select(col("id"), col("auth").as("authority"), col("hub")), it)
   }
 
   // g2b fixed-point parameters: same 1e-12 mass grid as g1b; the round
@@ -471,12 +467,8 @@ object Graph {
     // both degrees attached to the pinned edge row once (r17, g1b's
     // rationale): 10 unrolled a/h round pairs each drop TWO keyed joins
     // from the plan; integer arithmetic keeps the twin bit-exact
-    val eRaw = Checkpoints.eager(edges)
-    val eEdges = Checkpoints.eager(eRaw.df
-      .join(eRaw.df.groupBy(col("src")).agg(count(lit(1)).as("odeg")), Seq("src"))
-      .join(eRaw.df.groupBy(col("dst")).agg(count(lit(1)).as("ideg")), Seq("dst")))
-    eRaw.release()
     val epsBase = (15L * G1bScale / 100L) / n
+    val eEdges = pinDegrees(edges, "odeg", Some("ideg"))
     var hubs = docs.select(col("id"), lit(G1bScale / n).as("h"))
     var auths: DataFrame = null
     for (_ <- 1 to G2bRounds) {
@@ -491,8 +483,7 @@ object Graph {
         .groupBy(col("id")).agg(sum(col("c")).as("s"))
         .select(col("id"), (lit(epsBase) + expr("(85 * s) DIV 100")).as("h"))
     }
-    val fin = Checkpoints.eager(hubs.join(auths, Seq("id")))
-    eEdges.release()
+    val fin = try Checkpoints.eager(hubs.join(auths, Seq("id"))) finally eEdges.release()
     fin.df.select(col("id").as("doc_id"), col("a").as("auth_e12"),
         col("h").as("hub_e12"))
       .orderBy(col("auth_e12").desc, col("doc_id"))
@@ -642,9 +633,10 @@ object Graph {
     val eEdges = Checkpoints.eager(
       out.union(out.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
-    val fin = Checkpoints.eager(labelPropagate(
-      docs.select(col("id"), col("id").as("lbl")), eEdges.df, G3Rounds))
-    eEdges.release()
+    val fin =
+      try Checkpoints.eager(labelPropagate(
+        docs.select(col("id"), col("id").as("lbl")), eEdges.df, G3Rounds))
+      finally eEdges.release()
     fin.df.groupBy(col("lbl")).agg(count(lit(1)).as("size"))
       .select(col("lbl").as("community"), col("size"))
       .orderBy(col("size").desc, col("community"))
@@ -732,16 +724,17 @@ object Graph {
       greatest(col("src"), col("dst")).as("v")).distinct().cache()
     val deg = und.select(col("u").as("id")).union(und.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d")).cache()
-    val wedges = deg.agg(sum(expr("(d * (d - 1)) DIV 2")).as("w")).head().getLong(0)
-    val nEdges = und.count()
     val oriented = orientEdges(und, deg).cache()
-    val triangles = orientedWedges(oriented)
-      .join(oriented.select(
-        least(col("s"), col("t")).as("b"), greatest(col("s"), col("t")).as("c")),
-        Seq("b", "c"))
-      .count()
+    val (wedges, nEdges, triangles) = try (
+      deg.agg(sum(expr("(d * (d - 1)) DIV 2")).as("w")).head().getLong(0),
+      und.count(),
+      orientedWedges(oriented)
+        .join(oriented.select(
+          least(col("s"), col("t")).as("b"), greatest(col("s"), col("t")).as("c")),
+          Seq("b", "c"))
+        .count())
+    finally { und.unpersist(); deg.unpersist(); oriented.unpersist() }
     import s.implicits._
-    und.unpersist(); deg.unpersist(); oriented.unpersist()
     Seq((n, nEdges, wedges, triangles))
       .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles")
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Checkpoints, Tables}
+import graft.{Fixpoint, Tables}
 import graft.functions.SimFunctions._
 import graft.functions.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -505,13 +505,16 @@ object Similarity {
     *
     * Scale shape: k linear passes, O(k·n) dot products total. The
     * running min-cosine-distance column is re-materialized per round
-    * via Checkpoints.eager (flat lineage; superseded blocks released —
-    * the d7 loop discipline), so each round costs ONE map pass (a
-    * single vec_dot against the just-chosen center, inlined as a
-    * literal array) plus a TakeOrdered(1) argmax; no shuffle ever
-    * carries vectors. The naive rebuild — min distance to ALL centers
-    * each round — is O(k²·n) with k-deep expression chains and is
-    * exactly what this form avoids.
+    * as a [[graft.Fixpoint]] state (flat lineage; superseded blocks
+    * released, on a throw too — the d7 loop discipline), so each round
+    * costs ONE map pass (a single vec_dot against the just-chosen
+    * center, inlined as a literal array) whose checkpoint job also
+    * carries the argmax as an observed struct max — one job per round,
+    * where a TakeOrdered(1) argmax was a second; n and the seed ride the
+    * first checkpoint the same way. No shuffle ever carries vectors.
+    * The naive rebuild — min distance to ALL centers each round — is
+    * O(k²·n) with k-deep expression chains and is exactly what this
+    * form avoids.
     *
     * Rows-only oracle (iterative); SimilaritySpec pins determinism,
     * the non-increasing coverage-radius invariant, and planted-cluster
@@ -526,16 +529,19 @@ object Similarity {
       grid: Boolean = false): DataFrame = {
     val spark = allIn.sparkSession
     import spark.implicits._
-    val n = allIn.count()
-    val first = allIn.select(col("vec_id"), col("v"), col("nrm"))
-      .orderBy(col("vec_id")).limit(1).collect().head
-    // (vec_id, v, nrm, coverage radius when chosen — 0 for the seed)
-    val centers = scala.collection.mutable.ArrayBuffer(
-      (first.getLong(0), first.getSeq[Double](1).toSeq, first.getDouble(2), 0.0))
-    var cur = Checkpoints.eager(allIn.select(col("vec_id"), col("v"),
-      col("nrm"), lit(2.0).as("mind")))
-    while (centers.length < math.min(k.toLong, n)) {
-      val (_, cv, cn, _) = centers.last
+    // signal: (n, centers so far), a center being (vec_id, v, nrm,
+    // coverage radius when chosen — 0 for the seed). n and the seed (min
+    // vec_id) ride the first checkpoint, each round's argmax (mind desc,
+    // vec_id asc) rides its own as a struct max — exact, order-only picks
+    val init = Fixpoint.Plan(allIn.select(col("vec_id"), col("v"),
+        col("nrm"), lit(2.0).as("mind")), count(lit(1)).as("n"),
+        min(struct(col("vec_id"), col("v"), col("nrm"))).as("seed")) { (_, m) =>
+      require(m.getLong(0) > 0, "k-center needs at least one vector")
+      val c = m.getStruct(1)
+      (m.getLong(0), Vector((c.getLong(0), c.getSeq[Double](1), c.getDouble(2), 0.0)))
+    }
+    val centers = Fixpoint.run(_.iterate(k, init) { case (cur, (n, cs)) =>
+      val (_, cv, cn, _) = cs.last
       val d0 = lit(1.0) -
         dot(col("v"), array(cv.map(lit): _*)) / (col("nrm") * lit(cn))
       // grid = s8b's hash-twin mode: every distance snaps to the 1e-6
@@ -543,17 +549,13 @@ object Similarity {
       // comparison of identical doubles in both engines (the s2Sql
       // precedent — round-6 cosines replay bit-for-bit in DuckDB)
       val d = if (grid) round(d0, 6) else d0
-      val next = Checkpoints.eager(
-        cur.df.withColumn("mind", least(col("mind"), d)))
-      cur.release()
-      cur = next
-      val row = cur.df.orderBy(col("mind").desc, col("vec_id"))
-        .limit(1).collect().head
-      centers += ((row.getLong(0), row.getSeq[Double](1).toSeq,
-        row.getDouble(2), row.getDouble(3)))
-    }
-    cur.release()
-    centers.toSeq.zipWithIndex
+      Fixpoint.Plan(cur.withColumn("mind", least(col("mind"), d)),
+          max(struct(col("mind"), -col("vec_id"), col("v"), col("nrm"))).as("far")) { (_, m) =>
+        val c = m.getStruct(0)
+        (n, cs :+ ((-c.getLong(1), c.getSeq[Double](2), c.getDouble(3), c.getDouble(0))))
+      }
+    } { case (n, cs) => cs.length >= math.min(k.toLong, n) }.signal._2)
+    centers.zipWithIndex
       .map { case ((id, _, _, r), i) => (i, id, math.rint(r * 1e6) / 1e6) }
       .toDF("rank", "vec_id", "radius")
   }
@@ -1277,8 +1279,8 @@ object Similarity {
     * DuckDB twin (one unrolled min-update + argmax CTE pair per center)
     * matches hash-exactly. s8 (raw-double distances) stays the declared
     * path; s8b closes the family's rows-only gap. Same scale shape as
-    * s8: k map passes, one TakeOrdered(1) per round, vectors never
-    * shuffle.
+    * s8: k map passes, one job per round (the argmax rides the
+    * checkpoint), vectors never shuffle.
     */
   def s8bKCenterFixed(s: SparkSession, dir: String): DataFrame =
     kCenterFrame(vecs(s, dir), KCenterK, grid = true)
@@ -1286,7 +1288,7 @@ object Similarity {
   /** The s8b twin: m_i carries the running grid min-distance after
     * center i, p_{i+1} is its (mind desc, vec_id) argmax — the radius
     * column is the picked row's mind, matching the Spark loop's
-    * post-update collect. Every m/p CTE is referenced by the next round
+    * post-update argmax. Every m/p CTE is referenced by the next round
     * AND the final union, hence MATERIALIZED (the g2b lesson).
     */
   val s8bSql: String = {

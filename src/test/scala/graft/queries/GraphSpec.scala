@@ -49,9 +49,10 @@ class GraphSpec extends AnyFunSuite {
     // chain 0→1→2 plus 3→1: node 1 (two in-links) must beat node 3
     // (none), and the run is deterministic
     val edges = Seq(0L -> 1L, 1L -> 2L, 3L -> 1L)
-    val a = run(0L to 3L, edges)
+    val (a, aIters) = runCounting(0L to 3L, edges)
     val b = run(0L to 3L, edges)
     assert(a == b, "power iteration is not deterministic")
+    assert(aIters == 35, s"chain iterations: $aIters")
     assert(a(1L) > a(3L) && a(2L) > a(3L))
   }
 
@@ -68,10 +69,12 @@ class GraphSpec extends AnyFunSuite {
     val (starRanks, starIters) = runCounting(0L to 9L, star)
     assert(starIters > ringIters && starIters <= Graph.PrMaxIters,
       s"star iterations: $starIters")
+    assert(starIters == 40, s"star iterations: $starIters")
     // a looser tolerance stops no later, and the converged ordering is
     // the same one the tight run produced
     val (looseRanks, looseIters) = runCounting(0L to 9L, star, nodeTol = 1e-4)
     assert(looseIters <= starIters)
+    assert(looseIters == 28, s"loose star iterations: $looseIters")
     assert(looseRanks.toSeq.sortBy(-_._2).map(_._1).head ==
       starRanks.toSeq.sortBy(-_._2).map(_._1).head)
   }
@@ -94,6 +97,7 @@ class GraphSpec extends AnyFunSuite {
     assert(math.abs(rows.values.map(_._1).sum - 1.0) < 1e-9)
     assert(math.abs(rows.values.map(_._2).sum - 1.0) < 1e-9)
     assert(iters < Graph.PrMaxIters, s"must converge, not cap: $iters")
+    assert(iters == 8, s"hits star iterations: $iters")
     // deterministic
     val (df2, _) = Graph.hitsConverged(
       (0L to 9L).toDF("id"), (1L to 9L).map(i => i -> 0L).toDF("src", "dst"))
@@ -121,6 +125,7 @@ class GraphSpec extends AnyFunSuite {
     val n = docs.count()
     val (_, iters) = Graph.hitsConverged(docs, Graph.g2Edges(docs, n))
     assert(iters < Graph.PrMaxIters, s"fixture must converge, not cap: $iters")
+    assert(iters == 14, s"g2 fixture iterations: $iters")
 
     val rows = Graph.g2Hits(spark, TestSpark.sfDir).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
@@ -134,6 +139,10 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("g1 on the fixture: top-100, ranks descending, all positive") {
+    val docs = graft.Tables.documents(spark, TestSpark.sfDir)
+      .select(org.apache.spark.sql.functions.col("doc_id").as("id"))
+    val (_, iters) = Graph.pageRankConverged(docs, Graph.g1Edges(docs, docs.count()))
+    assert(iters == 16, s"g1 fixture iterations: $iters")
     val rows = Graph.g1PageRank(spark, TestSpark.sfDir).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     assert(rows.length == 100)
@@ -159,12 +168,12 @@ class GraphSpec extends AnyFunSuite {
     val (pr, prIters) = Graph.pageRankConverged(nodes, edges)
     pr.count()
     val afterPr = sc.getPersistentRDDs.keySet -- before
-    assert(prIters > 1 && afterPr.size <= 2,
+    assert(prIters == 40 && afterPr.size == 1,
       s"pagerank ($prIters rounds) leaked ${afterPr.size} persistent RDD pins")
     val (hits, hIters) = Graph.hitsConverged(nodes, edges)
     hits.count()
     val afterHits = sc.getPersistentRDDs.keySet -- before -- afterPr
-    assert(hIters > 1 && afterHits.size <= 2,
+    assert(hIters == 16 && afterHits.size == 1,
       s"hits ($hIters rounds) leaked ${afterHits.size} persistent RDD pins")
   }
 

@@ -201,10 +201,10 @@ class SimilaritySpec extends AnyFunSuite {
       radii.mkString(","))
   }
 
-  test("s8 covers planted clusters before revisiting any of them") {
-    // three tight unit-vector bundles on orthogonal axes: the first
-    // three selections must touch all three clusters (greedy k-center's
-    // defining behavior), regardless of cluster sizes
+  /** Three tight unit-vector bundles on orthogonal axes, 12 rows; each
+    * row's cluster is vec_id % 3.
+    */
+  private lazy val planted = {
     val dim = 8
     def axisVec(axis: Int, eps: Double, flip: Int): Seq[Double] = {
       val v = Array.fill(dim)(0.0)
@@ -212,16 +212,63 @@ class SimilaritySpec extends AnyFunSuite {
       v((axis + 3) % dim) = eps * (if (flip % 2 == 0) 1 else -1)
       v.toSeq
     }
-    val rows = (0 until 12).map { i =>
-      val cluster = i % 3
-      (i.toLong, axisVec(cluster, 0.01 + 0.001 * i, i), cluster)
-    }
-    val df = rows.toDF("vec_id", "v", "cluster")
+    (0 until 12).map(i => (i.toLong, axisVec(i % 3, 0.01 + 0.001 * i, i), i % 3))
+      .toDF("vec_id", "v", "cluster")
       .withColumn("nrm", graft.functions.SimFunctions.l2Norm(col("v")))
-    val picked = Similarity.kCenterFrame(df, 3).collect().map(_.getLong(1))
-    val clusterOf = rows.map(r => r._1 -> r._3).toMap
-    assert(picked.map(clusterOf).toSet == Set(0, 1, 2),
-      s"first 3 centers hit clusters ${picked.map(clusterOf).toSeq}")
+  }
+
+  test("s8 covers planted clusters before revisiting any of them") {
+    // the first three selections must touch all three clusters (greedy
+    // k-center's defining behavior), regardless of cluster sizes
+    val picked = Similarity.kCenterFrame(planted, 3).collect().map(_.getLong(1))
+    assert(picked.map(_ % 3).toSet == Set(0L, 1L, 2L),
+      s"first 3 centers hit clusters ${picked.map(_ % 3).toSeq}")
+  }
+
+  test("k-center on the planted frame: recorded picks, radii and ranks; no pin left behind") {
+    def run(df: org.apache.spark.sql.DataFrame, k: Int, grid: Boolean) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val rows = Similarity.kCenterFrame(df, k, grid).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(spark.sparkContext.getPersistentRDDs.keySet -- before == Set.empty,
+        s"k=$k grid=$grid left pins")
+      rows
+    }
+    // recorded from the loop as it stood before the fixed-point driver
+    // (seed from a count + sorted collect, argmax by TakeOrdered(1))
+    val head = Seq((0, 0L, 0.0), (1, 1L, 1.0), (2, 2L, 1.0))
+    val mid = Seq((3, 11L, 5.44e-4), (4, 10L, 4.8e-4), (5, 9L, 4.2e-4))
+    val tail = Seq(6L, 7L, 8L, 3L, 4L, 5L)
+    val gridTail = Seq(3L, 4L, 5L, 6L, 7L, 8L)
+    def ranked(ids: Seq[Long]) = ids.zipWithIndex.map { case (id, i) => (6 + i, id, 1.8e-5) }
+    for (grid <- Seq(false, true)) {
+      assert(run(planted, 3, grid) == head)
+      val all = head ++ mid ++ ranked(if (grid) gridTail else tail)
+      // k = n and k > n both stop once every row is a center
+      assert(run(planted, 12, grid) == all)
+      assert(run(planted, 16, grid) == all)
+    }
+    assert(run(planted.filter(col("vec_id") === 5L), 3, grid = false) == Seq((0, 5L, 0.0)))
+  }
+
+  test("s8b runs at least 17 fewer jobs than the loop before the fixed-point driver") {
+    // n and the seed ride the first checkpoint and each round's argmax
+    // its own: 35 jobs per call on this fixture before, at k = 16
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rows =
+      try Similarity.s8bKCenterFixed(spark, dir).collect()
+      finally {
+        Thread.sleep(1000) // let the async listener bus drain
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(rows.length == Similarity.KCenterK)
+    assert(jobs.get() <= 35 - 17, s"${jobs.get()} jobs for one s8b call")
   }
 
   test("TopKAggregator equals global sort-take on random input under any split") {
