@@ -303,17 +303,15 @@ object TrainingPipeline {
     val exact = exactDedup(stage, stage("quality_gate",
       ingested.filter(qualityScore(col("text")) >= minQuality)))
 
-    // near-dup gate against the persistent index — drop ids are batch-
-    // sized (a subset of the batch), so the anti-join broadcasts. The
-    // eagerBuild THUNK brackets the probe's construction, capturing the
-    // internal caches its bucket-list collect pins (Checkpoints doc);
-    // released as soon as the stage materializes.
+    // near-dup gate against the persistent index: only the dropped ids
+    // are pinned (no verdicts are published here). The eagerBuild THUNK
+    // brackets the probe's construction, capturing the internal caches
+    // its bucket-list collect pins (Checkpoints doc); released as soon
+    // as the stage materializes.
     val gate = Checkpoints.eagerBuild(s)(
-      Dedup.d19ProbeStored(s, exact, storeDir)
-        .select(col("new_id").as("doc_id")).distinct())
+      probedIds(Dedup.d19ProbeStored(s, exact, storeDir)))
     val novel =
-      try stage("near_dup_gate",
-        exact.join(broadcast(gate.df), Seq("doc_id"), "left_anti"))
+      try gateStage(stage, "near_dup_gate", exact, Some(gate.df))
       finally gate.release() // the stage is eager, so releasing here is safe
 
     // embedding near-dup gate (the d20 store): probe the SURVIVORS'
@@ -324,10 +322,8 @@ object TrainingPipeline {
         val survivorVecs = embs.select(col("vec_id"), col("embedding"))
           .join(novel.select(col("doc_id").as("vec_id")), Seq("vec_id"))
         val eGate = Checkpoints.eagerBuild(s)(
-          Dedup.d20ProbeStored(s, survivorVecs, eStore)
-            .select(col("new_id").as("doc_id")).distinct())
-        try stage("embed_dup_gate",
-          novel.join(broadcast(eGate.df), Seq("doc_id"), "left_anti"))
+          probedIds(Dedup.d20ProbeStored(s, survivorVecs, eStore)))
+        try gateStage(stage, "embed_dup_gate", novel, Some(eGate.df))
         finally eGate.release()
       case _ => novel
     }
@@ -341,10 +337,8 @@ object TrainingPipeline {
           .join(embedGated.select(col("doc_id").as("media_id")),
             Seq("media_id"))
         val mGate = Checkpoints.eagerBuild(s)(
-          Multimodal.mm9ProbeStored(s, survivorMedia, mStore)
-            .select(col("new_id").as("doc_id")).distinct())
-        try stage("media_dup_gate",
-          embedGated.join(broadcast(mGate.df), Seq("doc_id"), "left_anti"))
+          probedIds(Multimodal.mm9ProbeStored(s, survivorMedia, mStore)))
+        try gateStage(stage, "media_dup_gate", embedGated, Some(mGate.df))
         finally mGate.release()
       case _ => embedGated
     }
@@ -359,10 +353,7 @@ object TrainingPipeline {
     // path at all.
     Checkpoints.sweep(s) {
       val sh = Dedup.shingleSetsOf(clean).cache()
-      sh.withColumn("bucket",
-          pmod(xxhash64(col("doc_id")), lit(Dedup.D19Buckets.toLong)))
-        .repartition(col("bucket")) // small-files guard (sigStoreRows' note)
-        .write.mode("append").partitionBy("bucket")
+      Dedup.shingleStoreRows(sh).write.mode("append").partitionBy("bucket")
         .parquet(s"$storeDir/shingles")
       Dedup.minhashBands(sh).write.mode("append").parquet(s"$storeDir/bands")
     }
@@ -393,6 +384,23 @@ object TrainingPipeline {
     (chunks, stage.counts)
   }
 
+  /** The ids a gate drops: the distinct `new_id`s of its probe pairs,
+    * as `doc_id`.
+    */
+  private def probedIds(probe: DataFrame): DataFrame =
+    probe.select(col("new_id").as("doc_id")).distinct()
+
+  /** One gate stage of the incremental curations: drop the [[probedIds]]
+    * frame `dropped` from `survivors` and materialize the rest as stage
+    * `name` (`None` — nothing probed — passes every survivor). The
+    * dropped ids are batch-sized (a subset of the batch), so the
+    * anti-join broadcasts. The caller owns the pin behind `dropped`.
+    */
+  private def gateStage(stage: Stages, name: String, survivors: DataFrame,
+      dropped: Option[DataFrame]): DataFrame =
+    stage(name, dropped.fold(survivors)(d =>
+      survivors.join(broadcast(d), Seq("doc_id"), "left_anti")))
+
   /** The unified verdict-frame schema [[curateIncrementalBatch]]
     * publishes per batch: one row per (gate, probe pair), `score` is
     * the gate's native measure (jaccard / cosine / hamming) widened to
@@ -405,20 +413,17 @@ object TrainingPipeline {
   val ChunksDdl: String =
     "doc_id BIGINT, chunk_id INT, source STRING, chunk STRING, n_tok INT"
 
-  /** Published verdicts of one curated batch, read back in the exact
-    * [[VerdictsDdl]] shape from WHICHEVER layout the batch was written
-    * in — the flat per-table layout (`outDir/verdicts/batch=<id>`) or
-    * the folded single-write layout `foldWrites = true` produces
-    * (`outDir/curated/batch=<id>/kind=verdicts`). A batch with no
-    * verdict rows (bootstrap) reads as an empty frame of the right
-    * schema either way — the folded write emits no partition dir for
-    * an empty side, and reading a data-less dir would otherwise throw.
+  /** Published verdicts of one curated batch
+    * (`outDir/verdicts/batch=<id>`), read back in the exact
+    * [[VerdictsDdl]] shape. A missing or data-less dir reads as an
+    * empty frame of that schema — reading it would otherwise throw.
     */
   def readVerdicts(s: SparkSession, outDir: String, batchId: Long): DataFrame =
     readPublished(s, outDir, batchId, "verdicts", VerdictsDdl)
 
-  /** Published chunks of one curated batch — layout-agnostic twin of
-    * [[readVerdicts]] in the [[ChunksDdl]] shape.
+  /** Published chunks of one curated batch
+    * (`outDir/chunks/batch=<id>`) — [[readVerdicts]]' twin in the
+    * [[ChunksDdl]] shape.
     */
   def readChunks(s: SparkSession, outDir: String, batchId: Long): DataFrame =
     readPublished(s, outDir, batchId, "chunks", ChunksDdl)
@@ -426,29 +431,10 @@ object TrainingPipeline {
   private def readPublished(s: SparkSession, outDir: String, batchId: Long,
       kind: String, ddl: String): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    val foldedRoot = new java.io.File(s"$outDir/curated/batch=$batchId")
-    val folded = new java.io.File(foldedRoot, s"kind=$kind")
-    val flat = new java.io.File(s"$outDir/$kind/batch=$batchId")
-    // the folded layout is only trusted when its write COMMITTED
-    // (_SUCCESS at the batch root): a torn folded write followed by a
-    // flat-layout retry must not shadow the repaired data with its
-    // partial remnants — the same commit-marker doctrine as
-    // GateStore.alreadyMerged. But a COMMITTED fold is AUTHORITATIVE,
-    // empty sides included: a fold whose requested kind legitimately
-    // wrote zero rows (no kind= dir — zero-row partitioned writes emit
-    // none) reads as the empty frame and never falls through to a
-    // stale flat dir from an earlier layout of the same batch.
-    val foldedCommitted = new java.io.File(foldedRoot, "_SUCCESS").exists()
-    val readable =
-      if (foldedCommitted)
-        Some(folded).filter(graft.streaming.GateStore.hasDataFiles)
-      else Some(flat).filter(graft.streaming.GateStore.hasDataFiles)
-    readable match {
-      case Some(d) =>
-        s.read.parquet(d.toString).select(schema.fields.toSeq.map(f => col(f.name)): _*)
-      case None =>
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    val dir = new java.io.File(s"$outDir/$kind/batch=$batchId")
+    if (graft.streaming.GateStore.hasDataFiles(dir))
+      s.read.parquet(dir.toString).select(schema.fields.toSeq.map(f => col(f.name)): _*)
+    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   /** [[curateIncremental]] made REPLAY-SAFE — the at-least-once edition
@@ -487,11 +473,6 @@ object TrainingPipeline {
     * gate's multi-probe recall dial ([[Dedup.d20ProbeDirs]]) and
     * `mediaProbeDepth` the media gate's ([[Multimodal.mm9Probe]];
     * depth 1 certifies the full hamming-6 radius).
-    * `foldWrites` selects only the publish layout. `true` lands
-    * verdicts + chunks as ONE kind-partitioned write under
-    * `outDir/curated/batch=<id>` instead of two jobs (read them back via
-    * [[readVerdicts]] / [[readChunks]] — row-identical to the flat
-    * layout, spec-pinned): one fewer publish job per batch.
     *
     * The stores' PAYLOAD appends (shingles / sigs / media bands) always
     * run concurrently through [[Concurrent.map]]: the append-order
@@ -510,7 +491,6 @@ object TrainingPipeline {
       mediaStoreDir: Option[String] = None,
       sigSpec: Dedup.SigSpec = Dedup.SigNarrow,
       probeDepth: Int = 0,
-      foldWrites: Boolean = false,
       mediaProbeDepth: Int = 0,
       mhSpec: Dedup.MinHashSpec = Dedup.MinHashDefault): Unit = {
     import graft.streaming.GateStore
@@ -556,13 +536,8 @@ object TrainingPipeline {
     // PEAK storage inside the batch), the sweep guarantees zero leaks
     // on ANY exit. Double-release is a no-op (unpersist is idempotent).
     Checkpoints.sweep(s) {
-      // prior store partitions: strictly below this batch, data-bearing
-      // (zero-row committed dirs are sentinels, not readable inputs)
       def prior(root: String, table: String): Seq[String] =
-        GateStore.listBatchDirs(new java.io.File(s"$root/$table"))
-          .filter { case (id, p) =>
-            id < batchId && GateStore.hasDataFiles(new java.io.File(p)) }
-          .map(_._2)
+        GateStore.priorDirs(root, table, batchId)
 
       val stage = new Stages
       val ingested = stage("ingest", batch)
@@ -579,12 +554,8 @@ object TrainingPipeline {
         if (textPrior.isEmpty) None
         else Some(Checkpoints.eagerBuild(s)(Dedup.d19ProbeDirs(
           s, exact, textPrior, prior(storeDir, "shingles"), mhSpec)))
-      val novel = textV match {
-        case None => stage("near_dup_gate", exact)
-        case Some(cp) => stage("near_dup_gate",
-          exact.join(broadcast(cp.df.select(col("new_id").as("doc_id")).distinct()),
-            Seq("doc_id"), "left_anti"))
-      }
+      val novel = gateStage(stage, "near_dup_gate", exact,
+        textV.map(cp => probedIds(cp.df)))
 
       val embedV = (batchEmbeddings, embedStoreDir) match {
         case (Some(embs), Some(eStore)) if prior(eStore, "sigs").nonEmpty =>
@@ -596,12 +567,8 @@ object TrainingPipeline {
       }
       val embedGated =
         if (embedStoreDir.isEmpty) novel
-        else embedV match {
-          case None => stage("embed_dup_gate", novel)
-          case Some(cp) => stage("embed_dup_gate",
-            novel.join(broadcast(cp.df.select(col("new_id").as("doc_id")).distinct()),
-              Seq("doc_id"), "left_anti"))
-        }
+        else gateStage(stage, "embed_dup_gate", novel,
+          embedV.map(cp => probedIds(cp.df)))
 
       val mediaV = (batchMedia, mediaStoreDir) match {
         case (Some(media), Some(mStore)) if prior(mStore, "bands").nonEmpty =>
@@ -615,12 +582,8 @@ object TrainingPipeline {
       }
       val mediaGated =
         if (mediaStoreDir.isEmpty) embedGated
-        else mediaV match {
-          case None => stage("media_dup_gate", embedGated)
-          case Some(cp) => stage("media_dup_gate",
-            embedGated.join(broadcast(cp.df.select(col("new_id").as("doc_id")).distinct()),
-              Seq("doc_id"), "left_anti"))
-        }
+        else gateStage(stage, "media_dup_gate", embedGated,
+          mediaV.map(cp => probedIds(cp.df)))
 
       val clean = decontaminate(s, stage, mediaGated, benchDir)
 
@@ -636,35 +599,13 @@ object TrainingPipeline {
       val verdicts = verdictParts.reduceOption(_.unionByName(_)).getOrElse(
         s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(VerdictsDdl)))
-      if (foldWrites) {
-        // one frame, one write: verdicts and chunks union under a
-        // `kind` discriminator (null-padded to the superset schema) and
-        // land in a single kind-partitioned job. readVerdicts/readChunks
-        // project the exact per-table shapes back out; an empty side
-        // simply has no kind= partition dir (zero-row partitioned
-        // writes emit none — the readers' data-less fallback).
-        def nul(t: String, n: String) = lit(null).cast(t).as(n)
-        val vSide = verdicts.select(lit("verdicts").as("kind"),
-          col("modality"), col("new_id"), col("dup_of"), col("score"),
-          nul("bigint", "doc_id"), nul("int", "chunk_id"),
-          nul("string", "source"), nul("string", "chunk"), nul("int", "n_tok"))
-        val cSide = chunkFrame(clean).select(lit("chunks").as("kind"),
-          nul("string", "modality"), nul("bigint", "new_id"),
-          nul("bigint", "dup_of"), nul("double", "score"),
-          col("doc_id"), col("chunk_id"), col("source"),
-          col("chunk"), col("n_tok"))
-        vSide.unionByName(cSide).write.mode("overwrite")
-          .partitionBy("kind").parquet(s"$outDir/curated/batch=$batchId")
-        Seq(textV, embedV, mediaV).flatten.foreach(_.release())
-      } else {
-        verdicts.write.mode("overwrite").parquet(s"$outDir/verdicts/batch=$batchId")
-        Seq(textV, embedV, mediaV).flatten.foreach(_.release())
+      verdicts.write.mode("overwrite").parquet(s"$outDir/verdicts/batch=$batchId")
+      Seq(textV, embedV, mediaV).flatten.foreach(_.release())
 
-        // 2. chunks (written straight to disk — no checkpoint needed,
-        //    the stage count reads the committed file back)
-        chunkFrame(clean).write.mode("overwrite")
-          .parquet(s"$outDir/chunks/batch=$batchId")
-      }
+      // 2. chunks (written straight to disk — no checkpoint needed,
+      //    the stage count reads the committed file back)
+      chunkFrame(clean).write.mode("overwrite")
+        .parquet(s"$outDir/chunks/batch=$batchId")
 
       // 3. per-stage accounting: the chunks were never checkpointed, so
       //    their count re-reads the committed file
@@ -681,9 +622,7 @@ object TrainingPipeline {
       Checkpoints.sweep(s) {
         val sh = Dedup.shingleSetsOf(clean).cache()
         val payloadAppends: Seq[() => Unit] = Seq(
-          Some(() => sh.withColumn("bucket",
-              pmod(xxhash64(col("doc_id")), lit(Dedup.D19Buckets.toLong)))
-            .repartition(col("bucket")) // small-files guard (sigStoreRows' note)
+          Some(() => Dedup.shingleStoreRows(sh)
             .write.mode("overwrite").partitionBy("bucket")
             .parquet(s"$storeDir/shingles/batch=$batchId")),
           (batchEmbeddings, embedStoreDir) match {

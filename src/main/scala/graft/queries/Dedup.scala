@@ -962,39 +962,6 @@ object Dedup {
        |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
   }
 
-  /** D8: embedding near-dup at scale — the banded-LSH candidate path
-    * that d4's scaladoc promises (d4 is the exact-quadratic oracle
-    * baseline). Each vector gets a 16-bit hyperplane-sign signature
-    * (the s6 Rademacher hyperplanes); candidates are pairs agreeing on
-    * at least one of 4 × 4-bit bands (equi-join on (band, value) — the
-    * d2/d3 pigeonhole shape), then every candidate is verified with the
-    * EXACT cosine, so reported pairs are always true ≥0.4 pairs
-    * (LSH costs recall, never precision). At 100 TB: signatures are
-    * map-only, the band join shuffles 2-byte keys, and only candidate
-    * pairs ever touch full vectors.
-    */
-  /** (vec_id, v, nrm, sig): double vector, L2 norm, and the 16-bit
-    * hyperplane sign signature — d8's per-vector prep, factored so the
-    * one-shot self-join (d8) and the incremental index (d20) share one
-    * signature definition.
-    */
-  private[graft] def embedSigs(emb: DataFrame): DataFrame = {
-    import graft.functions.SimFunctions.{toDoubleVec, dot, l2Norm}
-    val sigExpr = (0 until 16).map(i =>
-      when(dot(col("v"), typedLit(graft.queries.Similarity.lshHyperplane(i))) >= 0,
-        lit(1 << i)).otherwise(lit(0))).reduce(_ + _)
-    emb.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", l2Norm(col("v")))
-      .withColumn("sig", sigExpr)
-  }
-
-  /** 4×4-bit pigeonhole band rows (vec_id, band, bv) off [[embedSigs]]. */
-  private[graft] def embedBands(sigs: DataFrame): DataFrame =
-    sigs.select(col("vec_id"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sig"), b * 4).bitwiseAND(lit(15))): _*))
-        .as(Seq("band", "bv")))
-
   /** Hyperplane-signature geometry for the d20 embedding gate: `bits`
     * sign bits split into `bands` bands of `bits/bands` bits each. The
     * dial is recall-vs-candidates: a band COLLIDES two vectors with
@@ -1046,9 +1013,10 @@ object Dedup {
     def legacyGeometryIds: Seq[String] = Seq(s"SigSpec($bits,$bands)")
   }
 
-  /** The oracle-pinned 16-bit/4-band geometry — [[embedSigs]]'s exact
-    * signature values (the d8/d20 DuckDB twins replay it bit-for-bit),
-    * kept as the default so every hash-checked path is byte-stable.
+  /** The oracle-pinned 16-bit/4-band geometry — the exact signature
+    * values d8 and d20 compute (their DuckDB twins replay it
+    * bit-for-bit), kept as the default so every hash-checked path is
+    * byte-stable.
     */
   val SigNarrow: SigSpec = SigSpec(16, 4)
 
@@ -1058,11 +1026,12 @@ object Dedup {
     */
   val SigWide: SigSpec = SigSpec(64, 4)
 
-  /** [[embedSigs]] at an arbitrary [[SigSpec]] geometry — sig is LONG
-    * (the narrow geometry yields the same VALUES as [[embedSigs]],
-    * widened). Hyperplane i is the same FNV-derived Rademacher vector
-    * at every geometry, so narrow signatures are a prefix-truncation of
-    * wide ones.
+  /** (vec_id, v, nrm, sig): double vector, L2 norm, and the
+    * hyperplane sign signature at a [[SigSpec]] geometry (sig is LONG)
+    * — the one per-vector prep the one-shot self-join (d8), the inline
+    * index (d20) and the stores all share. Hyperplane i is the same
+    * FNV-derived Rademacher vector at every geometry, so narrow
+    * signatures are a prefix-truncation of wide ones.
     */
   private[graft] def embedSigsSpec(emb: DataFrame, spec: SigSpec): DataFrame = {
     import graft.functions.SimFunctions.{toDoubleVec, dot, l2Norm}
@@ -1083,10 +1052,21 @@ object Dedup {
         .as(Seq("band", "bv")))
   }
 
+  /** D8: embedding near-dup at scale — the banded-LSH candidate path
+    * that d4's scaladoc promises (d4 is the exact-quadratic oracle
+    * baseline). Each vector gets a 16-bit hyperplane-sign signature
+    * (the s6 Rademacher hyperplanes); candidates are pairs agreeing on
+    * at least one of 4 × 4-bit bands (equi-join on (band, value) — the
+    * d2/d3 pigeonhole shape), then every candidate is verified with the
+    * EXACT cosine, so reported pairs are always true ≥0.4 pairs
+    * (LSH costs recall, never precision). At 100 TB: signatures are
+    * map-only, the band join shuffles 2-byte keys, and only candidate
+    * pairs ever touch full vectors.
+    */
   def d8EmbeddingLsh(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.SimFunctions.dot
-    val e = embedSigs(Tables.embeddings(s, dir)).cache()
-    val bands = embedBands(e)
+    val e = embedSigsSpec(Tables.embeddings(s, dir), SigNarrow).cache()
+    val bands = embedBandsSpec(e, SigNarrow)
     val cand = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
           col("a.vec_id") < col("b.vec_id"))
@@ -1920,15 +1900,23 @@ object Dedup {
     // both tables are on disk nothing in memory is needed
     graft.Checkpoints.sweep(corpus.sparkSession) {
       val sh = shingleSetsOf(corpus).cache()
-      sh.withColumn("bucket",
-          pmod(xxhash64(col("doc_id")), lit(D19Buckets.toLong)))
-        .repartition(col("bucket")) // small-files guard (sigStoreRows' note)
-        .write.mode("overwrite").partitionBy("bucket")
+      shingleStoreRows(sh).write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$path/shingles")
       minhashBandsSpec(sh, mhSpec).write.mode("overwrite")
         .parquet(s"$path/bands")
     }
   }
+
+  /** The d19 shingle-store rows of a [[shingleSetsOf]] frame:
+    * (doc_id, sh, bucket) with bucket = pmod(xxhash64(doc_id),
+    * [[D19Buckets]]) — what [[d19WriteStore]] and the streaming/
+    * incremental appends all write, partitioned by `bucket`. The text
+    * store's twin of [[sigStoreRows]], with its small-files guard.
+    */
+  def shingleStoreRows(sh: DataFrame): DataFrame =
+    sh.withColumn("bucket",
+        pmod(xxhash64(col("doc_id")), lit(D19Buckets.toLong)))
+      .repartition(col("bucket")) // small-files guard (sigStoreRows' note)
 
   /** The at-scale probe against a [[d19WriteStore]] layout. Differs from
     * [[d19Probe]] (which shingles the live corpus frame — a full corpus
@@ -2068,12 +2056,13 @@ object Dedup {
   }
 
   /** Build the corpus index inline, then probe. Production persists
-    * `embedBands(embedSigs(corpus))` and the sig table once, appending
+    * `embedBandsSpec(embedSigsSpec(corpus, SigNarrow), SigNarrow)` and
+    * the sig table once, appending
     * per batch ([[d20Probe]] takes the loaded frames directly).
     */
   def d20Frame(corpus: DataFrame, batch: DataFrame): DataFrame = {
-    val ce = embedSigs(corpus).cache()
-    d20Probe(batch, embedBands(ce), ce)
+    val ce = embedSigsSpec(corpus, SigNarrow).cache()
+    d20Probe(batch, embedBandsSpec(ce, SigNarrow), ce)
   }
 
   /** The per-batch probe: `index` = corpus band rows, `corpusVecs` =
@@ -2082,8 +2071,8 @@ object Dedup {
   def d20Probe(batch: DataFrame, index: DataFrame,
       corpusVecs: DataFrame): DataFrame = {
     import graft.functions.SimFunctions.dot
-    val be = embedSigs(batch).cache()
-    val cand = embedBands(be).as("p")
+    val be = embedSigsSpec(batch, SigNarrow).cache()
+    val cand = embedBandsSpec(be, SigNarrow).as("p")
       .join(index.as("i"),
         col("p.band") === col("i.band") && col("p.bv") === col("i.bv"))
       .select(col("p.vec_id").as("new_id"), col("i.vec_id").as("dup_of"))
@@ -2134,7 +2123,7 @@ object Dedup {
     * double working vector (float→double→float is the identity), so
     * stored-probe verdicts stay byte-identical to the inline path while
     * the store scans half the bytes. `sig` is LONG at every [[SigSpec]]
-    * geometry (narrow values are [[embedSigs]]'s ints, widened); a
+    * geometry; a
     * store must be written and probed at ONE geometry — the stored sig
     * bits mean nothing under another spec's banding.
     */
@@ -2249,7 +2238,7 @@ object Dedup {
     // one read per root: bucket= is partitioning WITHIN each batch dir
     // (d19ProbeDirs' CONFLICTING_DIRECTORY_STRUCTURES note). The store
     // carries float vectors; widen to double at fetch time — same math
-    // as embedSigs, half the scan bytes.
+    // as embedSigsSpec, half the scan bytes.
     val fetched = sigDirs.map(d => s.read.parquet(d))
       .reduce(_.unionByName(_))
       .filter(col("bucket").isin(buckets: _*))

@@ -645,12 +645,12 @@ object Topics {
       .filter(keep(col("w")))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
 
-  /** The top-[[MaxWords]] rows of a [[wordCounts]] table by
-    * (count desc, word) — deterministic — as a local array.
+  /** The top-`n` rows of a [[wordCounts]] table by (count desc, word)
+    * — deterministic — as a local array.
     */
-  private def topWords(wc: DataFrame): Array[(String, Long)] = {
+  private def topWords(wc: DataFrame, n: Int = MaxWords): Array[(String, Long)] = {
     import wc.sparkSession.implicits._
-    wc.orderBy(col("n").desc, col("w")).limit(MaxWords).as[(String, Long)].collect()
+    wc.orderBy(col("n").desc, col("w")).limit(n).as[(String, Long)].collect()
   }
 
   /** Per-doc (doc_id, n_words, `outCol`) for the tokenizer encoders
@@ -1135,13 +1135,7 @@ object Topics {
   val ZipfTopN = 1000
   def m14ZipfSlope(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val top = Tables.documents(s, dir)
-      .select(explode(tokenize(col("text"))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("w"))
-      .limit(ZipfTopN)
-      .as[(String, Long)].collect()
+    val top = topWords(wordCounts(s, dir), ZipfTopN)
     val m = top.length
     var sx = 0.0; var sy = 0.0; var sxy = 0.0; var sxx = 0.0
     var i = 0

@@ -557,6 +557,18 @@ private[graft] object GateStore {
       .map(f => (f.getName.stripPrefix("batch=").toLong, f.getAbsolutePath))
       .sortBy(_._1)
 
+  /** A batch's readable prior inputs in `storeDir/table`: the
+    * data-bearing `batch=<id>` dirs strictly below `batchId`, ascending.
+    * Data-less committed dirs (zero-row batches) are sentinels, not
+    * inputs — see [[hasDataFiles]]: reading one throws and wedges the
+    * stream.
+    */
+  private[graft] def priorDirs(storeDir: String, table: String,
+      batchId: Long): Seq[String] =
+    listBatchDirs(new File(storeDir, table))
+      .filter { case (id, p) => id < batchId && hasDataFiles(new File(p)) }
+      .map(_._2)
+
   /** Batch ids strictly below this are compacted away — their sentinel
     * dirs were merged into a higher batch dir, and the marker vouches
     * for them instead.
@@ -615,13 +627,8 @@ private[graft] object GateStore {
     // commit, so an out-of-band maintain can never fold (and delete)
     // a superseded dir out from under the probe's running scan
     withStoreLock(storeDir, s"batch=$batchId", blocking = true) {
-      // data-less committed dirs (zero-row batches) are skipped, not read
-      // — see hasDataFiles: reading one throws and wedges the stream
       val prior = tables.map { case (t, _) =>
-        t -> listBatchDirs(new File(storeDir, t))
-          .filter { case (id, p) => id < batchId && hasDataFiles(new File(p)) }
-          .map(_._2)
-      }.toMap
+        t -> priorDirs(storeDir, t, batchId) }.toMap
       if (prior(sentinel).isEmpty)
         spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -69,10 +69,8 @@ object StreamCuration {
     * foreachBatch) is a byte-identical no-op via the TEXT store's
     * batch sentinel; all three stores are claimed for `owner` up front
     * so a second query cannot interleave ([[GateStore.claimOwner]]).
-    * `foldWrites` selects only the publish layout (folded verdicts +
-    * chunks, one job fewer); the payload appends always run
-    * concurrently and are all joined before the text-bands sentinel
-    * (see curateIncrementalBatch).
+    * The payload appends run concurrently and are all joined before the
+    * text-bands sentinel (see curateIncrementalBatch).
     *
     * This is the streaming face of the reference's 30-minute DAG
     * running ingest+process as one unit (bbc_news_dag.py:144-152),
@@ -84,7 +82,6 @@ object StreamCuration {
       sigSpec: graft.queries.Dedup.SigSpec = graft.queries.Dedup.SigNarrow,
       compactEvery: Option[Int] = None,
       probeDepth: Int = 0,
-      foldWrites: Boolean = false,
       mediaProbeDepth: Int = 0,
       mhSpec: graft.queries.Dedup.MinHashSpec =
         graft.queries.Dedup.MinHashDefault)
@@ -114,7 +111,7 @@ object StreamCuration {
         minQuality = minQuality,
         batchEmbeddings = Some(embs), embedStoreDir = Some(embedStoreDir),
         batchMedia = Some(media), mediaStoreDir = Some(mediaStoreDir),
-        sigSpec = sigSpec, probeDepth = probeDepth, foldWrites = foldWrites,
+        sigSpec = sigSpec, probeDepth = probeDepth,
         mediaProbeDepth = mediaProbeDepth, mhSpec = mhSpec)
       // inline leveled maintenance, per store (each keyed off its OWN
       // committed dirs — see GateStore.maybeCompactLeveled). Safe

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.queries.Dedup
 
@@ -114,10 +111,7 @@ object StreamNearDedup {
         // shingles first, bands (the sentinel table) LAST —
         // GateStore's append-order contract
         val sh = Dedup.shingleSetsOf(docs).cache()
-        sh.withColumn("bucket",
-            pmod(xxhash64(col("doc_id")), lit(Dedup.D19Buckets.toLong)))
-          .repartition(col("bucket")) // small-files guard (sigStoreRows' note)
-          .write.mode("overwrite").partitionBy("bucket")
+        Dedup.shingleStoreRows(sh).write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$storeDir/shingles/batch=$batchId")
         Dedup.minhashBandsSpec(sh, mhSpec).write.mode("overwrite")
           .parquet(s"$storeDir/bands/batch=$batchId")

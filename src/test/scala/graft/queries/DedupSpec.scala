@@ -705,8 +705,8 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val embTmp = java.nio.file.Files.createTempDirectory("d20-index-")
     try {
-      val ce = Dedup.embedSigs(eCorpus)
-      Dedup.embedBands(ce).write.parquet(embTmp.resolve("bands").toString)
+      val ce = Dedup.embedSigsSpec(eCorpus, Dedup.SigNarrow)
+      Dedup.embedBandsSpec(ce, Dedup.SigNarrow).write.parquet(embTmp.resolve("bands").toString)
       ce.write.parquet(embTmp.resolve("sigs").toString)
       val probed = Dedup.d20Probe(eBatch,
         spark.read.parquet(embTmp.resolve("bands").toString),
@@ -856,12 +856,12 @@ class DedupSpec extends AnyFunSuite {
     val sample = eCorpus.orderBy(col("vec_id")).limit(20)
     val sigPairs = Dedup.embedSigsSpec(sample, Dedup.SigWide)
       .select(col("vec_id"), col("sig"))
-      .join(Dedup.embedSigs(sample)
+      .join(Dedup.embedSigsSpec(sample, Dedup.SigNarrow)
         .select(col("vec_id"), col("sig").as("nsig")), Seq("vec_id"))
       .collect()
     assert(sigPairs.nonEmpty)
     sigPairs.foreach { r =>
-      assert((r.getLong(1) & 0xFFFFL) == r.getInt(2).toLong,
+      assert((r.getLong(1) & 0xFFFFL) == r.getLong(2),
         "narrow sig is not a prefix of the wide sig") }
 
     val wStore = java.nio.file.Files.createTempDirectory("d20-wide-")

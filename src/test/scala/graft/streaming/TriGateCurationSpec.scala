@@ -126,6 +126,12 @@ class TriGateCurationSpec extends AnyFunSuite {
     assert(c0("ingest") == 2 && c0("near_dup_gate") == 2 &&
       c0("embed_dup_gate") == 2 && c0("media_dup_gate") == 2, c0.toString)
     assert(verdictSet(outDir, 0).isEmpty)
+    // ...and reads back through readVerdicts as an empty frame of exactly
+    // the published schema
+    val v0 = TrainingPipeline.readVerdicts(spark, outDir, 0)
+    assert(v0.isEmpty)
+    assert(v0.schema ==
+      org.apache.spark.sql.types.StructType.fromDDL(TrainingPipeline.VerdictsDdl))
     assert(new java.io.File(s"$tStore/bands/batch=0/_SUCCESS").exists())
 
     // batch 1: one drop per modality, the control survives
@@ -164,6 +170,8 @@ class TriGateCurationSpec extends AnyFunSuite {
         .select(col("doc_id").as("media_id"), col("payload"), col("format"))),
       mediaStoreDir = Some(mStore))
     assert(watched.map(fp) == before, "replayed batch rewrote files")
+    // one publish layout: verdicts/ + chunks/, never a curated/ dir
+    assert(!new java.io.File(s"$outDir/curated").exists())
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
     assert(leaked.isEmpty, s"replay leaked persistent RDDs: $leaked")
 
@@ -375,91 +383,13 @@ class TriGateCurationSpec extends AnyFunSuite {
     }
   }
 
-  test("foldWrites: one publish job, row-identical verdicts+chunks via the layout-agnostic readers, same stores, replay still no-op") {
-    val root = java.nio.file.Files.createTempDirectory("trigate-fw-").toString
-    try {
-      val bs = alignedBatches()
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      def drive(tag: String, fold: Boolean): (String, String, Int) = {
-        val out = s"$root/out-$tag"
-        val sink = StreamCuration.triGateSink(spark, s"$root/text-$tag",
-          s"$root/embed-$tag", s"$root/media-$tag", dir, out,
-          owner = s"trigate-fw-$tag", foldWrites = fold)
-        spark.sparkContext.addSparkListener(listener)
-        jobs.set(0)
-        try bs.zipWithIndex.foreach { case (b, i) => sink(b, i.toLong) }
-        finally {
-          Thread.sleep(1000) // let the async listener bus drain
-          spark.sparkContext.removeSparkListener(listener)
-        }
-        (out, s"$root/text-$tag", jobs.get())
-      }
-      val (flatOut, flatText, flatJobs) = drive("flat", fold = false)
-      val (foldOut, foldText, foldJobs) = drive("fold", fold = true)
-      def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.collect().map(_.mkString("|")).toSet
-      (0 until bs.size).foreach { i =>
-        // layout-agnostic readers agree row-for-row AND schema-for-schema
-        val (vFlat, vFold) = (TrainingPipeline.readVerdicts(spark, flatOut, i),
-          TrainingPipeline.readVerdicts(spark, foldOut, i))
-        val (cFlat, cFold) = (TrainingPipeline.readChunks(spark, flatOut, i),
-          TrainingPipeline.readChunks(spark, foldOut, i))
-        assert(vFold.schema == vFlat.schema)
-        assert(cFold.schema == cFlat.schema)
-        assert(rows(vFold) == rows(vFlat), s"verdicts diverged, batch $i")
-        assert(rows(cFold) == rows(cFlat), s"chunks diverged, batch $i")
-        // the folded reader equals the flat layout's raw parquet too
-        assert(rows(vFold) == rows(spark.read
-          .parquet(s"$flatOut/verdicts/batch=$i")
-          .select("modality", "new_id", "dup_of", "score")))
-        // each mode writes ONLY its own layout
-        assert(!new java.io.File(s"$foldOut/verdicts").exists())
-        assert(!new java.io.File(s"$foldOut/chunks").exists())
-        assert(!new java.io.File(s"$flatOut/curated").exists())
-        // the concurrent payload appends left identical store rows
-        assert(rows(spark.read.parquet(s"$foldText/bands/batch=$i")) ==
-          rows(spark.read.parquet(s"$flatText/bands/batch=$i")),
-          s"text bands diverged, batch $i")
-      }
-      // bootstrap batch 0 published no verdict rows — the folded layout
-      // has no kind=verdicts dir and the reader degrades to an empty
-      // frame of the exact VerdictsDdl schema
-      assert(TrainingPipeline.readVerdicts(spark, foldOut, 0).isEmpty)
-      // the verdict+chunks fold is one write job instead of two
-      assert(foldJobs < flatJobs,
-        s"foldWrites ran $foldJobs jobs vs $flatJobs flat")
-      // replay stays a byte-identical no-op (sentinel ordering intact):
-      // re-deliver batch 1 and fingerprint the published files
-      def fp(p: String): Set[(String, Long, Long)] = {
-        import scala.jdk.CollectionConverters._
-        org.apache.commons.io.FileUtils
-          .listFiles(new java.io.File(p), null, true).asScala
-          .map(f => (f.getAbsolutePath, f.length(), f.lastModified())).toSet
-      }
-      val before = fp(s"$foldOut/curated/batch=1")
-      val sink = StreamCuration.triGateSink(spark, foldText,
-        s"$root/embed-fold", s"$root/media-fold", dir, foldOut,
-        owner = "trigate-fw-fold", foldWrites = true)
-      sink(bs(1), 1L)
-      assert(fp(s"$foldOut/curated/batch=1") == before,
-        "replayed folded batch rewrote published output")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-  }
-
   test("cancellation mid-append: batch fails before its sentinel, locks release, replay equals an uninterrupted control") {
     val root = java.nio.file.Files.createTempDirectory("trigate-cx-").toString
     try {
       val bs = alignedBatches()
       def mk(tag: String) = StreamCuration.triGateSink(spark,
         s"$root/text-$tag", s"$root/embed-$tag", s"$root/media-$tag",
-        dir, s"$root/out-$tag", owner = s"trigate-cx-$tag", foldWrites = true)
+        dir, s"$root/out-$tag", owner = s"trigate-cx-$tag")
       // control trio: the same batches, uninterrupted
       val control = mk("c")
       bs.zipWithIndex.foreach { case (b, i) => control(b, i.toLong) }
@@ -511,7 +441,7 @@ class TriGateCurationSpec extends AnyFunSuite {
       // them immediately instead of blocking LockWaitMs and throwing,
       // and repairs the batch to the control's exact verdicts/chunks
       victim(bs(1), 1L)
-      // folded layout → compare through the layout-agnostic readers
+      // compare the published output through readVerdicts/readChunks
       def vSet(out: String, id: Long): Set[String] =
         TrainingPipeline.readVerdicts(spark, out, id)
           .collect().map(_.mkString("|")).toSet
@@ -561,73 +491,6 @@ class TriGateCurationSpec extends AnyFunSuite {
       sinkM(bs(1), 2L); sinkC(bs(1), 2L)
       assert(verdictSet(s"$root/out-m", 2L) == verdictSet(s"$root/out-c", 2L),
         "tri-gate maintenance changed verdicts")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-  }
-
-  test("a torn folded publish never shadows a repaired flat layout: readers require the fold's commit marker") {
-    val root = java.nio.file.Files.createTempDirectory("trigate-torn-").toString
-    try {
-      val out = s"$root/out"
-      val torn = Seq((1L, 0, "webz", "torn partial rows", 3))
-        .toDF("doc_id", "chunk_id", "source", "chunk", "n_tok")
-      val repaired = Seq((2L, 0, "webz", "repaired flat rows", 3))
-        .toDF("doc_id", "chunk_id", "source", "chunk", "n_tok")
-      // simulate a folded write that died mid-flight: data files exist
-      // under kind=chunks but the batch root never got its _SUCCESS
-      torn.write.mode("overwrite").parquet(s"$out/curated/batch=0/kind=chunks")
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$out/curated/batch=0/kind=chunks/_SUCCESS"))
-      // the at-least-once retry ran with foldWrites=false and repaired
-      // the batch in the flat layout
-      repaired.write.mode("overwrite").parquet(s"$out/chunks/batch=0")
-      val got = TrainingPipeline.readChunks(spark, out, 0L)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(got == Set(2L),
-        s"torn folded remnants shadowed the repaired flat data: $got")
-      // once the folded batch root IS committed, it is preferred
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(s"$out/curated/batch=0/_SUCCESS"))
-      val got2 = TrainingPipeline.readChunks(spark, out, 0L)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(got2 == Set(1L))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-  }
-
-  test("a COMMITTED fold is authoritative even for an empty side: stale flat rows are never resurrected") {
-    val root = java.nio.file.Files.createTempDirectory("trigate-foldauth-").toString
-    try {
-      val out = s"$root/out"
-      // history: the batch was once published flat WITH verdict rows...
-      Seq(("text", 7L, 3L, 0.9))
-        .toDF("modality", "new_id", "dup_of", "score")
-        .write.mode("overwrite").parquet(s"$out/verdicts/batch=0")
-      // ...and later (store wiped, foldWrites turned on) re-published
-      // folded with a legitimately EMPTY verdict side: the fold is
-      // committed (_SUCCESS at the batch root) and carries only chunks
-      Seq((2L, 0, "webz", "folded chunk rows", 3))
-        .toDF("doc_id", "chunk_id", "source", "chunk", "n_tok")
-        .write.mode("overwrite").parquet(s"$out/curated/batch=0/kind=chunks")
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(s"$out/curated/batch=0/_SUCCESS"))
-      // the committed fold's empty verdict side READS EMPTY — the stale
-      // flat rows must not leak through the data-less fallback
-      val v = TrainingPipeline.readVerdicts(spark, out, 0L)
-      assert(v.isEmpty,
-        s"stale flat verdicts resurrected: ${v.collect().mkString(",")}")
-      assert(v.schema.fieldNames.toSeq ==
-        Seq("modality", "new_id", "dup_of", "score"))
-      // the fold's non-empty side reads normally
-      assert(TrainingPipeline.readChunks(spark, out, 0L)
-        .select("doc_id").collect().map(_.getLong(0)).toSet == Set(2L))
-      // and with NO fold commit, the flat layout still serves
-      java.nio.file.Files.delete(
-        java.nio.file.Paths.get(s"$out/curated/batch=0/_SUCCESS"))
-      assert(TrainingPipeline.readVerdicts(spark, out, 0L)
-        .select("new_id").collect().map(_.getLong(0)).toSet == Set(7L))
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     }
