@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftCache, Observation, Row, SparkSession}
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
 
@@ -19,13 +19,25 @@ import scala.concurrent.duration._
   * Any cache that happened to materialize inside the same action is
   * captured too; releasing it alongside the checkpoint is safe because
   * the checkpoint result no longer depends on anything upstream.
+  * Releasing such a `Dataset.cache()` also drops its cache-manager
+  * entry ([[unpin]]): an RDD-level unpersist alone leaves the entry
+  * registered, so a later `.cache()` of the same plan would find it,
+  * store nothing, and recompute on every read.
   */
 object Checkpoints {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   final case class Checkpointed(df: DataFrame, pinned: Seq[RDD[_]]) {
-    def release(): Unit = pinned.foreach(_.unpersist(blocking = false))
+    def release(): Unit = unpin(df.sparkSession, pinned)
+  }
+
+  /** Unpersist `rdds`, first dropping the cache-manager entries of the
+    * `Dataset.cache()`s among them.
+    */
+  private def unpin(spark: SparkSession, rdds: Seq[RDD[_]]): Unit = {
+    GraftCache.dropEntries(spark, rdds.map(_.id).toSet)
+    rdds.foreach(_.unpersist(blocking = false))
   }
 
   def eager(df: DataFrame): Checkpointed = eagerBuild(df.sparkSession)(df)
@@ -42,7 +54,7 @@ object Checkpoints {
     * brackets construction + checkpoint, so release() frees the probe's
     * internals too.
     */
-  def eagerBuild(spark: org.apache.spark.sql.SparkSession)(
+  def eagerBuild(spark: SparkSession)(
       build: => DataFrame): Checkpointed = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -53,16 +65,14 @@ object Checkpoints {
     // rethrowing, or a failed-and-retried micro-batch leaks per attempt
     val mat =
       try build.localCheckpoint(eager = true)
-      catch { case t: Throwable =>
-        delta().foreach(_.unpersist(blocking = false)); throw t
-      }
+      catch { case t: Throwable => unpin(spark, delta()); throw t }
     Checkpointed(mat, delta())
   }
 
   /** Bound on the wait for observed metrics: a query listener posts
     * them just after the job, so a lapse means a stalled listener bus.
     */
-  private val ObserveWait = 10.seconds
+  private[graft] val ObserveWait = 10.seconds
 
   /** [[eager]] with named aggregates that RIDE the checkpoint job via
     * `Dataset.observe`: the handle plus the metrics row, at no extra
@@ -77,19 +87,21 @@ object Checkpoints {
     val obs = Observation()
     val cp = eager(df.observe(obs, metric, more: _*))
     // an interrupted wait must not strand the pin it was waiting on
-    try (cp, awaitMetrics(cp, obs, metric +: more, ObserveWait))
+    try (cp, awaitMetrics(cp.df, obs, metric +: more, ObserveWait))
     catch { case t: Throwable => cp.release(); throw t }
   }
 
   /** The observed row, or — once `wait` lapses — the same aggregate
-    * scanned over the blocks `cp` pinned (one job, identical value).
+    * scanned over `over`, the frame the observation rode (one job,
+    * identical value; a checkpoint's pinned blocks, or an unpinned
+    * frame's lineage).
     */
-  private[graft] def awaitMetrics(cp: Checkpointed, obs: Observation,
+  private[graft] def awaitMetrics(over: DataFrame, obs: Observation,
       metrics: Seq[Column], wait: FiniteDuration): Row =
     try Await.result(obs.future, wait)
     catch { case _: TimeoutException =>
-      log.warn(s"observed metrics missing after $wait; scanning the checkpoint")
-      cp.df.agg(metrics.head, metrics.tail: _*).head()
+      log.warn(s"observed metrics missing after $wait; scanning the frame")
+      over.agg(metrics.head, metrics.tail: _*).head()
     }
 
   /** Run `work` and unpersist every RDD it left pinned. For WRITE legs
@@ -104,14 +116,13 @@ object Checkpoints {
     * fresh caches would be swept too. The streaming gates run one
     * micro-batch at a time, so nothing else runs beside their sweeps.
     */
-  def sweep[T](spark: org.apache.spark.sql.SparkSession)(work: => T): T = {
+  def sweep[T](spark: SparkSession)(work: => T): T = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     // finally: a throwing write leg must still release what it pinned
     // (a retried micro-batch would otherwise leak one cache per attempt)
     try work
-    finally sc.getPersistentRDDs
-      .collect { case (id, r) if !before.contains(id) => r }
-      .foreach(_.unpersist(blocking = false))
+    finally unpin(spark, sc.getPersistentRDDs
+      .collect { case (id, r) if !before.contains(id) => r }.toSeq)
   }
 }

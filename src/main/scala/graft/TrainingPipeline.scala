@@ -2,9 +2,10 @@ package graft
 
 import graft.functions.TextFunctions._
 import graft.queries.{Dedup, Multimodal, Relational, Text}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.concurrent.duration.FiniteDuration
 
 /** The full training-data curation flow, composed from the individual
   * operators the library ships — the end-to-end path a 100 TB corpus
@@ -19,7 +20,9 @@ import org.apache.spark.sql.functions._
   * composition and the per-stage row accounting a curation run reports.
   *
   * Scale shape of the composition: the first three stages are map-only
-  * filters that FUSE into the scan (one pass, no shuffle); exact dedup
+  * filters that FUSE into the scan — one pass, no shuffle, and one
+  * checkpoint: ingest and the quality gate are unpinned steps whose
+  * counts ride the stratified sample's checkpoint job; exact dedup
   * shuffles 32-byte digests; the near-dup and decontamination stages
   * semi/anti-join against id sets that are tiny relative to the corpus
   * (duplicate-cluster members, contaminated ids) and broadcast; the
@@ -42,8 +45,10 @@ object TrainingPipeline {
     */
   private[graft] var payloadFault: Int => Unit = _ => ()
 
-  /** Test-only tap: sees each stage's name and checkpointed frame while
-    * it is still pinned. No-op in production.
+  /** Test-only tap: sees each stage's name and frame once its count
+    * is known, in stage order — a pinned stage's checkpointed frame
+    * while it is still pinned, an unpinned step's own lineage. No-op in
+    * production.
     */
   private[graft] var stageTap: (String, DataFrame) => Unit = (_, _) => ()
 
@@ -57,13 +62,28 @@ object TrainingPipeline {
     * the new checkpoint has materialized: storage stays one stage deep
     * (TrainingPipelineSpec asserts the bound). The latest stage stays
     * pinned until [[releaseLast]].
+    *
+    * A map-only step that only ONE later frame consumes needs no pin:
+    * [[unpinned]] attaches its count as an observation and returns the
+    * frame unmaterialized. The count resolves when the next pinned
+    * stage materializes (its job runs the step's lineage too), with the
+    * same bounded wait and scan fallback as the pinned counts
+    * ([[Checkpoints.awaitMetrics]]). Counts and [[stageTap]] calls stay
+    * in stage order.
     */
-  final class Stages {
+  final class Stages private[graft] (metricWait: FiniteDuration) {
+    def this() = this(Checkpoints.ObserveWait)
+
     private val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    private val pending =
+      scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame, Observation)]
     private var last: Checkpoints.Checkpointed = null
+    private def rowCount = count(lit(1)).as("rows")
 
     def apply(name: String, df: DataFrame): DataFrame = {
-      val (cp, m) = Checkpoints.eagerObserved(df, count(lit(1)).as("rows"))
+      val (cp, m) = Checkpoints.eagerObserved(df, rowCount)
+      try resolvePending()
+      catch { case t: Throwable => cp.release(); throw t }
       rows += name -> m.getLong(0)
       stageTap(name, cp.df)
       releaseLast()
@@ -71,7 +91,25 @@ object TrainingPipeline {
       cp.df
     }
 
-    def counts: Seq[(String, Long)] = rows.toSeq
+    /** An unpinned step: `df` with its row count observed. Feed the
+      * result to exactly one frame that reaches the next pinned stage.
+      */
+    def unpinned(name: String, df: DataFrame): DataFrame = {
+      val obs = Observation()
+      pending += ((name, df, obs))
+      df.observe(obs, rowCount)
+    }
+
+    private def resolvePending(): Unit = {
+      pending.foreach { case (name, df, obs) =>
+        rows += name ->
+          Checkpoints.awaitMetrics(df, obs, Seq(rowCount), metricWait).getLong(0)
+        stageTap(name, df)
+      }
+      pending.clear()
+    }
+
+    def counts: Seq[(String, Long)] = { resolvePending(); rows.toSeq }
 
     def releaseLast(): Unit = if (last != null) last.release()
   }
@@ -88,16 +126,17 @@ object TrainingPipeline {
       semanticDedup: Boolean = false,
       shards: Int = 8): (DataFrame, Seq[(String, Long)]) = {
     val stage = new Stages
-    val docs = stage("ingest", Tables.documents(s, dir))
+    val docs = stage.unpinned("ingest", Tables.documents(s, dir))
 
-    // map-only gates — Catalyst fuses all three into the scan pass.
-    // With gopherGate on, the t22 rule battery (native gopher_flags
-    // bitmask) ANDs into the same fused filter — still zero shuffle.
+    // map-only gates — all three run in one scan pass, pinned once at
+    // the sample. With gopherGate on, the t22 rule battery (native
+    // gopher_flags bitmask) ANDs into the same filter — still zero
+    // shuffle.
     val qualityPred = {
       val base = qualityScore(col("text")) >= minQuality
       if (gopherGate) base && expr("gopher_flags(text)") === 127 else base
     }
-    val gated = stage("quality_gate", docs.filter(qualityPred))
+    val gated = stage.unpinned("quality_gate", docs.filter(qualityPred))
     val sampled = stage("stratified_sample",
       gated.filter(Relational.stratifiedKeep(col("doc_id"), col("lang"))))
 
@@ -548,11 +587,12 @@ object TrainingPipeline {
       // (curateIncremental's shape). The probe checkpoints are held until
       // the verdict union is WRITTEN — a released localCheckpoint cannot
       // be re-read, so releasing at stage time would lose the pair rows
-      // the verdict frame publishes.
+      // the verdict frame publishes. They pin the UNSORTED pair builders:
+      // no verdict reader uses the public probes' (new_id, dup_of) order.
       val textPrior = prior(storeDir, "bands")
       val textV =
         if (textPrior.isEmpty) None
-        else Some(Checkpoints.eagerBuild(s)(Dedup.d19ProbeDirs(
+        else Some(Checkpoints.eagerBuild(s)(Dedup.d19ProbePairs(
           s, exact, textPrior, prior(storeDir, "shingles"), mhSpec)))
       val novel = gateStage(stage, "near_dup_gate", exact,
         textV.map(cp => probedIds(cp.df)))
@@ -561,7 +601,7 @@ object TrainingPipeline {
         case (Some(embs), Some(eStore)) if prior(eStore, "sigs").nonEmpty =>
           val survivorVecs = embs.select(col("vec_id"), col("embedding"))
             .join(novel.select(col("doc_id").as("vec_id")), Seq("vec_id"))
-          Some(Checkpoints.eagerBuild(s)(Dedup.d20ProbeDirs(
+          Some(Checkpoints.eagerBuild(s)(Dedup.d20ProbePairs(
             s, survivorVecs, prior(eStore, "sigs"), sigSpec, probeDepth)))
         case _ => None
       }
@@ -576,7 +616,7 @@ object TrainingPipeline {
             .select(col("media_id"), col("payload"), col("format"))
             .join(embedGated.select(col("doc_id").as("media_id")),
               Seq("media_id"))
-          Some(Checkpoints.eagerBuild(s)(Multimodal.mm9ProbeDirs(
+          Some(Checkpoints.eagerBuild(s)(Multimodal.mm9ProbePairs(
             s, survivorMedia, prior(mStore, "bands"), mediaProbeDepth)))
         case _ => None
       }

@@ -48,7 +48,7 @@ object Dedup {
     * compare set SIZES, never positions, so no twin changes.
     */
   private def shingleSets(s: SparkSession, dir: String): DataFrame =
-    shingleSetsOf(Tables.documents(s, dir))
+    shingleSetsOf(Tables.fanOut(Tables.documents(s, dir), col("doc_id")))
 
 
   /** [[shingleSets]] over an arbitrary (doc_id, text, ...) frame — the
@@ -150,19 +150,30 @@ object Dedup {
     * 128-permutation signature is computed whole at every geometry
     * (the native expression's one pass is cheaper than a parameterized
     * variant would save); banding uses its first bands·rows positions.
+    *
+    * The cache holds the COMPACT index — (doc_id, bands), `bands` the
+    * array of B band hashes — never the 128-long signature (a quarter
+    * of its bytes at the default 32 bands), and the band rows
+    * posexplode straight off it. The cache itself is
+    * load-bearing: without it the band rows' plan re-inlines
+    * `minhash128` into every one of the 128 `element_at` references
+    * (the re-inline d2's scaladoc records). The signature is an alias
+    * of one projection, and the band hashes read it from the one above,
+    * so the cached plan evaluates `minhash128` exactly once (DedupSpec
+    * pins both).
     */
   private[graft] def minhashBandsSpec(sh: DataFrame,
       spec: MinHashSpec): DataFrame = {
     val B = spec.bands; val R = spec.rows
-    // cache is load-bearing: the element_at references below would
-    // otherwise each inline (and recompute) the full signature scan
-    val sig = sh.select(col("doc_id"),
-      GraftNative.column(graft.expressions.MinHash128(
-        GraftNative.expression(col("sh")))).as("mh")).cache()
-    val bandCols = array((0 until B).map(b =>
+    val bandHashes = array((0 until B).map(b =>
       xxhash64((0 until R).map(r =>
         element_at(col("mh"), b * R + r + 1)): _*)): _*)
-    sig.select(col("doc_id"), posexplode(bandCols).as(Seq("band", "bh")))
+    val index = sh.select(col("doc_id"),
+        GraftNative.column(graft.expressions.MinHash128(
+          GraftNative.expression(col("sh")))).as("mh"))
+      .select(col("doc_id"), bandHashes.as("bands"))
+      .cache()
+    index.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "bh")))
   }
 
   /** DuckDB: same shingle sets via list comprehension. */
@@ -317,8 +328,9 @@ object Dedup {
     * MAP-ONLY, one pass per row (round 3's explode + 128 grouped
     * min-aggregates still exchanged the exploded corpus; and a nested
     * higher-order expression re-inlines at every element_at reference,
-    * observed 170 s vs 3 s at sf0.001 — the cache() below is what pins
-    * the signature column against that CollapseProject re-inline).
+    * observed 170 s vs 3 s at sf0.001 — the compact band-index cache
+    * in [[minhashBandsSpec]] is what pins the signature against that
+    * re-inline).
     */
   def d2MinHashPairs(s: SparkSession, dir: String): DataFrame =
     minHashPairs(s, dir).orderBy(col("id1"), col("id2"))
@@ -329,13 +341,13 @@ object Dedup {
     * range-partition sampling job and an exchange.
     */
   private[graft] def minHashPairs(s: SparkSession, dir: String): DataFrame = {
-    // loader deliberately NOT fanned (re-measured r18, confirming the
-    // r17 rejection): unlike d16 — whose win was the 15.8 MB pair-agg
-    // exchange the doc_id partitioning eliminates — d2/d3/d5's pair
-    // shuffles are ~10 KB (AQE broadcasts everything), so a fan-out only
-    // adds an ~860 KB corpus-text exchange and 32-task stage latency.
-    // Isolated 5-run medians: d2 1.77→1.69 (flat), d3 0.69→0.87,
-    // d5 0.70→1.07, d18 3.49→4.44 — reverted.
+    // the loader fans out to every core (Tables.fanOut) and the band
+    // index caches compactly (minhashBandsSpec). The fan-out alone
+    // measured flat in isolated d2 runs (1.77 → 1.69 s); with the
+    // compact cache it pays inside curate. Traced perfbench curate,
+    // seed 1, 4 cores: the jobs of d7's first checkpoint, which runs
+    // these 285 pairs, took 1.41 s before and 1.04 s after, for ~1.4 MB
+    // more shuffle (the loader's corpus-text exchange).
     val sh = shingleSets(s, dir).cache()
     val bands = minhashBands(sh)
     val cand = bands.as("a").join(bands.as("b"),
@@ -1961,7 +1973,18 @@ object Dedup {
     */
   def d19ProbeDirs(s: SparkSession, batch: DataFrame,
       bandDirs: Seq[String], shingleDirs: Seq[String],
-      mhSpec: MinHashSpec = MinHashDefault): DataFrame = {
+      mhSpec: MinHashSpec = MinHashDefault): DataFrame =
+    d19ProbePairs(s, batch, bandDirs, shingleDirs, mhSpec)
+      .orderBy(col("new_id"), col("dup_of"))
+
+  /** [[d19ProbeDirs]] without the presentation sort — what a caller
+    * that pins the verdict pairs checkpoints
+    * ([[graft.TrainingPipeline.curateIncrementalBatch]]), where the
+    * `orderBy` would only add a range-partition sort no reader uses.
+    */
+  private[graft] def d19ProbePairs(s: SparkSession, batch: DataFrame,
+      bandDirs: Seq[String], shingleDirs: Seq[String],
+      mhSpec: MinHashSpec): DataFrame = {
     val batchSh = shingleSetsOf(batch).cache()
     val index = s.read.parquet(bandDirs: _*)
     val cand = minhashBandsSpec(batchSh, mhSpec).as("p")
@@ -2006,7 +2029,6 @@ object Dedup {
       .filter(col("j") >= 0.5)
       .select(col("new_id"), col("dup_of"), round(col("j"), 6).as("jaccard"))
       .dropDuplicates(Seq("new_id", "dup_of"))
-      .orderBy(col("new_id"), col("dup_of"))
     // cand stays cached: `out` still references it and unpersisting here
     // would re-run the band join at materialization. Batch-sized.
     // Release hook: bracket the CALL in Checkpoints.eagerBuild (thunk
@@ -2198,7 +2220,15 @@ object Dedup {
 
   def d20ProbeDirs(s: SparkSession, batch: DataFrame,
       sigDirs: Seq[String], spec: SigSpec = SigNarrow,
-      probeDepth: Int = 0): DataFrame = {
+      probeDepth: Int = 0): DataFrame =
+    d20ProbePairs(s, batch, sigDirs, spec, probeDepth)
+      .orderBy(col("new_id"), col("dup_of"))
+
+  /** [[d20ProbeDirs]] without the presentation sort
+    * ([[d19ProbePairs]]' rationale).
+    */
+  private[graft] def d20ProbePairs(s: SparkSession, batch: DataFrame,
+      sigDirs: Seq[String], spec: SigSpec, probeDepth: Int): DataFrame = {
     import graft.functions.SimFunctions.dot
     val masks = d20ProbeMasks(spec.bandBits, probeDepth)
     // multi-probe = the batch band rows, fanned |masks|-fold BEFORE the
@@ -2257,7 +2287,6 @@ object Dedup {
       .filter(col("cos") >= 0.4)
       .select(col("new_id"), col("dup_of"), round(col("cos"), 6).as("cos"))
       .dropDuplicates(Seq("new_id", "dup_of"))
-      .orderBy(col("new_id"), col("dup_of"))
   }
 
   /** Oracle: d8's signature replay, asymmetric across the `% 10` split. */

@@ -873,7 +873,12 @@ object Multimodal {
     * never precision.
     */
   def mm9Probe(batch: DataFrame, index: DataFrame, probeDepth: Int = 0,
-      maxHamming: Int = Mm6MaxHamming): DataFrame = {
+      maxHamming: Int = Mm6MaxHamming): DataFrame =
+    mm9ProbeUnsorted(batch, index, probeDepth, maxHamming)
+      .orderBy(col("new_id"), col("dup_of"))
+
+  private def mm9ProbeUnsorted(batch: DataFrame, index: DataFrame,
+      probeDepth: Int, maxHamming: Int): DataFrame = {
     val masks = Dedup.d20ProbeMasks(PhashBandChars, probeDepth)
     val bp = phashBands(phashOf(batch).cache())
     val cand = (if (masks.size == 1)
@@ -898,7 +903,6 @@ object Multimodal {
     cand.withColumn("hamming", ham.cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("new_id"), col("dup_of"), col("hamming"))
-      .orderBy(col("new_id"), col("dup_of"))
   }
 
   /** The persistable mm9 index rows of a (media_id, payload, format)
@@ -952,6 +956,14 @@ object Multimodal {
       bandDirs: Seq[String], probeDepth: Int = 0,
       maxHamming: Int = Mm6MaxHamming): DataFrame =
     mm9Probe(batch, s.read.parquet(bandDirs: _*), probeDepth, maxHamming)
+
+  /** [[mm9ProbeDirs]] without the presentation sort
+    * ([[Dedup.d19ProbePairs]]' rationale).
+    */
+  private[graft] def mm9ProbePairs(s: SparkSession, batch: DataFrame,
+      bandDirs: Seq[String], probeDepth: Int): DataFrame =
+    mm9ProbeUnsorted(batch, s.read.parquet(bandDirs: _*), probeDepth,
+      Mm6MaxHamming)
 
   /** Oracle: mm6Sql's byte-path phash replay with the asymmetric
     * batch/corpus predicates.

@@ -459,12 +459,15 @@ object Text {
     * surviving paragraphs in order. A document whose every paragraph is
     * boilerplate disappears entirely.
     *
-    * Scale shape: paragraph slicing and digests are map-only; the dedup
-    * decision shuffles ONLY (digest, doc_id, idx) triples — min_by
-    * partials map-side combine, text never rides the dedup exchange;
-    * the keep-set joins back against the recomputed paragraph stream,
-    * and reassembly is one shuffle keyed by doc_id, so paragraph text
-    * crosses the wire exactly once.
+    * Scale shape: ONE pass over the paragraph split and two exchanges.
+    * The split (tokenize, explode, slice) is evaluated once; the keep
+    * flag is a window min of (doc_id, idx) per md5 digest (exchange 1,
+    * keyed by digest), and one doc_id aggregation (exchange 2) counts
+    * the paragraphs, counts the kept ones and reassembles the kept text
+    * in idx order. Paragraph text rides both exchanges; a digest-only
+    * decision would need the split again for the text, which is the
+    * four-branch shape this replaced (three shuffles in its final
+    * adaptive plan at sf0.001, against two here).
     */
   def t19ParagraphDedup(s: SparkSession, dir: String): DataFrame =
     paragraphDedupFrame(Tables.documents(s, dir)).orderBy(col("doc_id"))
@@ -473,31 +476,27 @@ object Text {
     * curation pipeline, which joins `body` back as the cleaned text.
     */
   def paragraphDedupFrame(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val P = 16
     val paraTokens = slice(col("t"), col("idx") * P + 1, lit(P))
-    val paras = docs
+    val first = struct(col("doc_id"), col("idx"))
+    docs
       .select(col("doc_id"), tokenize(col("text")).as("t"))
       .filter(size(col("t")) > 0)
       .select(col("doc_id"), col("t"),
         explode(sequence(lit(0),
           floor((size(col("t")) - 1) / P.toDouble).cast("int"))).as("idx"))
       .select(col("doc_id"), col("idx"), array_join(paraTokens, " ").as("para"))
-    val keys = paras.select(col("doc_id"), col("idx"), md5(col("para")).as("h"))
-    val winners = keys.groupBy(col("h"))
-      .agg(min_by(struct(col("doc_id"), col("idx")),
-        struct(col("doc_id"), col("idx"))).as("w"))
-      .select(col("h"), col("w.doc_id").as("wdoc"), col("w.idx").as("widx"))
-    val keep = keys.join(winners, Seq("h"))
-      .filter(col("doc_id") === col("wdoc") && col("idx") === col("widx"))
-      .select(col("doc_id"), col("idx"))
-    val totals = keys.groupBy(col("doc_id")).agg(count(lit(1)).as("n_paras"))
-    paras.join(keep, Seq("doc_id", "idx"), "left_semi")
+      .withColumn("keep",
+        first === min(first).over(Window.partitionBy(md5(col("para")))))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_kept"),
+      .agg(count(lit(1)).as("n_paras"),
+        count_if(col("keep")).as("n_kept"),
         array_join(
-          transform(array_sort(collect_list(struct(col("idx"), col("para")))),
+          transform(array_sort(collect_list(
+              when(col("keep"), struct(col("idx"), col("para"))))),
             x => x.getField("para")), " ").as("body"))
-      .join(totals, Seq("doc_id"))
+      .filter(col("n_kept") > 0)
       .select(col("doc_id"), col("n_paras"), col("n_kept"), col("body"))
   }
 

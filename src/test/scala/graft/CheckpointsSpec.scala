@@ -8,7 +8,8 @@ import scala.concurrent.duration._
 
 /** Observed checkpoint metrics: they fire under an eager
   * localCheckpoint and are exact, and the bounded wait falls back to a
-  * scan of the pinned blocks when they never arrive.
+  * scan of the pinned blocks when they never arrive. Releases drop the
+  * cache-manager entries of the caches they unpersist.
   */
 class CheckpointsSpec extends AnyFunSuite {
 
@@ -34,7 +35,7 @@ class CheckpointsSpec extends AnyFunSuite {
     try {
       val t0 = System.nanoTime()
       // the observation is never attached to any frame, so it never fires
-      val row = Checkpoints.awaitMetrics(cp, Observation(),
+      val row = Checkpoints.awaitMetrics(cp.df, Observation(),
         Seq(count(lit(1)).as("n"), sum(col("id")).as("s")), 200.millis)
       val ms = (System.nanoTime() - t0) / 1000000L
       assert(row.getLong(0) == 10000L && row.getLong(1) == 49995000L)
@@ -65,5 +66,42 @@ class CheckpointsSpec extends AnyFunSuite {
       assert(m.getLong(0) == 10000L && m.getLong(0) == scanned.getLong(0))
       assert(m.getLong(1) == scanned.getLong(1))
     } finally cp.release()
+  }
+
+  /** RDD ids that `body` newly persisted, and how many of their
+    * partitions hold blocks afterwards.
+    */
+  private def cachedPartitions(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body
+    val fresh = sc.getPersistentRDDs.keySet -- before
+    sc.getRDDStorageInfo.filter(i => fresh(i.id)).map(_.numCachedPartitions).sum
+  }
+
+  test("release and sweep drop the cache-manager entry of a cache they unpersist; re-caching stores blocks") {
+    import org.apache.spark.storage.StorageLevel
+    def base(k: Int) = spark.range(0, 20000, 1, 4).toDF("id")
+      .withColumn("x", col("id") * k % 13)
+    val viaCheckpoint = base(7)
+    val cp = Checkpoints.eagerBuild(spark) {
+      viaCheckpoint.cache().groupBy(col("x")).count()
+    }
+    assert(viaCheckpoint.storageLevel != StorageLevel.NONE)
+    cp.release()
+    // an RDD-level unpersist alone leaves the entry: the same plan would
+    // then re-cache nothing
+    assert(viaCheckpoint.storageLevel == StorageLevel.NONE,
+      "release left the cache-manager entry behind")
+    try assert(cachedPartitions(viaCheckpoint.cache().count()) > 0,
+      "re-caching the released plan stored no blocks")
+    finally viaCheckpoint.unpersist(blocking = true)
+
+    val viaSweep = base(11)
+    Checkpoints.sweep(spark)(viaSweep.cache().count())
+    assert(viaSweep.storageLevel == StorageLevel.NONE,
+      "sweep left the cache-manager entry behind")
+    try assert(cachedPartitions(viaSweep.cache().count()) > 0)
+    finally viaSweep.unpersist(blocking = true)
   }
 }

@@ -115,18 +115,26 @@ class TrainingPipelineSpec extends AnyFunSuite {
     // final-stage call sites of the jobs the stage hook submitted,
     // minus the tap's own recount jobs (their job group)
     val hookJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val scanJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val tapped = Option(j.properties)
           .exists(_.getProperty("spark.jobGroup.id") == "stage-tap")
-        j.stageInfos.sortBy(-_.stageId).headOption.map(_.details)
-          .filter(d => !tapped && d.contains("TrainingPipeline$Stages.apply"))
+        val site = j.stageInfos.sortBy(-_.stageId).headOption.map(_.details)
+        site.filter(d => !tapped && d.contains("TrainingPipeline$Stages.apply"))
           .foreach(hookJobs.add)
+        // a metric that missed its checkpoint falls back to a scan
+        if (site.exists(_.contains("Checkpoints$.awaitMetrics")))
+          scanJobs.incrementAndGet()
       }
     }
     val recounted = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val checkpointed = scala.collection.mutable.ArrayBuffer.empty[String]
     TrainingPipeline.stageTap = (name, df) => {
+      if (df.queryExecution.analyzed
+          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+        checkpointed += name
       sc.setJobGroup("stage-tap", s"recount $name")
       try recounted += name -> df.count() finally sc.clearJobGroup()
     }
@@ -143,13 +151,35 @@ class TrainingPipelineSpec extends AnyFunSuite {
         depth.fold(System.clearProperty("spark.callstack.depth"))(
           System.setProperty("spark.callstack.depth", _))
       }
+    // the tap sees all eight stages in order; the two map-only front
+    // steps ride the stratified sample's checkpoint, so six pin
     assert(recounted.toSeq == counts)
+    assert(counts.size == 8)
+    assert(checkpointed.toSeq == counts.map(_._1)
+      .filterNot(Set("ingest", "quality_gate")), checkpointed.toString)
+    assert(scanJobs.get() == 0, s"${scanJobs.get()} fallback metric scans")
     assert(chunks.count() == counts.last._2)
     import scala.jdk.CollectionConverters._
     val jobs = hookJobs.asScala.toSeq
-    assert(jobs.size >= counts.size, s"${jobs.size} hook jobs for ${counts.size} stages")
+    assert(jobs.size >= checkpointed.size,
+      s"${jobs.size} hook jobs for ${checkpointed.size} pinned stages")
     jobs.foreach(d => assert(d.contains("Checkpoints$.eagerBuild"),
       s"stage-hook job outside a checkpoint materialization:\n$d"))
+  }
+
+  test("an unpinned step whose count never rides a checkpoint resolves by a bounded scan") {
+    import scala.concurrent.duration._
+    val stage = new TrainingPipeline.Stages(300.millis)
+    // the step feeds nothing: the next pinned stage materializes another
+    // frame, so its observation never fires
+    stage.unpinned("orphan", spark.range(0, 1000, 1, 4).toDF("id"))
+    val t0 = System.nanoTime()
+    stage("pinned", spark.range(0, 10, 1, 2).toDF("id"))
+    val ms = (System.nanoTime() - t0) / 1000000L
+    try {
+      assert(stage.counts == Seq("orphan" -> 1000L, "pinned" -> 10L))
+      assert(ms >= 300 && ms < 10000, s"resolution took $ms ms")
+    } finally stage.releaseLast()
   }
 
   test("gopher gate tightens the quality stage and only that stage") {

@@ -748,6 +748,43 @@ class DedupSpec extends AnyFunSuite {
       n == 9000007L && d == srcRow.getLong(0) && j == 1.0 })
   }
 
+  test("the MinHash band index caches (doc_id, bands) — 32 longs, no 128-long signature — and evaluates minhash128 once") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    graft.Checkpoints.sweep(spark) {
+      val sh = Dedup.shingleSetsOf(Tables.documents(spark, dir))
+      val bands = Dedup.minhashBands(sh)
+      val cached = bands.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r
+      }
+      assert(cached.size == 1, bands.queryExecution.withCachedData.toString)
+      val index = cached.head
+      assert(index.output.map(_.name) == Seq("doc_id", "bands"),
+        index.output.toString)
+      assert(index.output(1).dataType match {
+        case ArrayType(LongType, _) => true
+        case _ => false
+      }, index.output.toString)
+      // one minhash128 in the cached plan: the 128 element_at reads see
+      // a projected column, not 128 inlined copies of the expression
+      val logical = index.cacheBuilder.logicalPlan
+      val nMinhash = logical.collect { case n =>
+        n.expressions.map(_.collect {
+          case m: graft.expressions.MinHash128 => m }.size).sum
+      }.sum
+      assert(nMinhash == 1, logical.toString)
+      assert(index.cacheBuilder.cachedPlan.toString.split("minhash128\\(").length - 1 == 1,
+        index.cacheBuilder.cachedPlan.toString)
+      // 32 band rows per doc, banded 0..31
+      val perDoc = bands.groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n"), min(col("band")).as("lo"),
+          max(col("band")).as("hi"))
+        .select(col("n"), col("lo"), col("hi")).distinct().collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+      assert(perDoc == Seq((32L, 0, 31)))
+    }
+  }
+
   test("MinHashSpec geometry: default is the frozen oracle shape; the sharp 16x8 store halves index rows, surfaces clones, and refines candidates") {
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 10 =!= 7)

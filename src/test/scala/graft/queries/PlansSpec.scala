@@ -196,12 +196,14 @@ class PlansSpec extends AnyFunSuite {
     assert(prune > join, "bloom prune is not upstream of the semi-join")
   }
 
-  test("t19 dedup shuffles digests for the min_by vote and combines reassembly map-side") {
+  test("t19 dedup flags first paragraphs by a digest window, reassembly map-side") {
     val plan = executedPlan(Text.t19ParagraphDedup(spark, dir))
-    // winners: per-digest min_by aggregation (partials combine before the
-    // digest-keyed exchange); reassembly: partial collect_list below the
-    // doc_id exchange, so paragraph text rides exactly one shuffle
-    assert(plan.contains("min_by"), s"winners vote missing:\n$plan")
+    // first occurrence: a window min of (doc_id, idx) over the md5
+    // partitioning, with no winners aggregate joined back to the split;
+    // reassembly: partial collect_list below the doc_id exchange
+    assert(plan.contains("Window [min(") && plan.contains("md5("),
+      s"digest window missing:\n$plan")
+    assert(!plan.contains("min_by"), s"winners vote still joined back:\n$plan")
     assert(plan.contains("partial_collect_list"),
       "reassembly is not map-side combined")
   }

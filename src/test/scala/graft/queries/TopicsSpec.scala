@@ -26,6 +26,53 @@ class TopicsSpec extends AnyFunSuite {
     }
   }
 
+  test("the shared corpus cache holds one joined string per doc and round-trips the tokens") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-corpus-").toString
+    Seq((1L, "Markets rallied as investors weighed the central bank outlook"),
+      (2L, "a of the an it"), // stop words and short words only: no tokens
+      (3L, ""),
+      (4L, null: String))
+      .toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+    val c = Topics.cachedCorpus(spark, tmp)
+    val scans = c.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    }
+    assert(scans.size == 1)
+    assert(scans.head.relation.output.map(_.dataType) ==
+      Seq(org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.StringType))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), Option(r.getSeq[String](1)))).sortBy(_._1).toSeq
+    val got = rows(c)
+    assert(got == rows(Topics.corpus(spark, tmp)))
+    assert(got.map(_._2.map(_.size)) == Seq(Some(7), Some(0), Some(0), None))
+  }
+
+  test("the vocabulary fit persists no token copy of its own and keeps the maxDF fraction") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
+    val c = Topics.cachedCorpus(spark, dir)
+    c.count()
+    val sc = spark.sparkContext
+    val stored = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val i = e.blockUpdatedInfo
+        if (i.storageLevel.isValid) i.blockId.asRDDId.foreach(b => stored.add(b.rddId))
+      }
+    }
+    org.apache.spark.GraftSparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    val cv = try { val m = Topics.fitVectorizer(c)
+      org.apache.spark.GraftSparkInternals.drainListenerBus(sc); m }
+    finally sc.removeSparkListener(l)
+    // CountVectorizer always caches its vocabulary-sized term counts; a
+    // second stored RDD is the token copy it persists to count the corpus
+    assert(stored.size <= 1, s"CountVectorizer stored RDDs $stored")
+    val ref = new org.apache.spark.ml.feature.CountVectorizer()
+      .setInputCol("tokens").setMinDF(10).setMaxDF(0.9)
+      .fit(Topics.corpus(spark, dir).cache())
+    assert(cv.vocabulary.toSeq == ref.vocabulary.toSeq)
+  }
+
   test("LDA with fixed seed is deterministic run-to-run") {
     val c = Topics.corpus(spark, dir).cache()
     val cv = Topics.fitVectorizer(c)
